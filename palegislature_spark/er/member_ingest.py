@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from palegislature_spark.er.name_match import names_match
+from palegislature_spark.er.name_match import merge_template
 
 MEMBER_COLS = [
     "id",
@@ -161,7 +161,14 @@ def upsert_current_members(
     single = joined.filter((F.col("__n") == 1) & F.col("__mid").isNotNull())
     unmatched = joined.filter(F.col("__n") == 0)
 
-    name_ok = names_match(F.col("__mname"), F.col("name"), True)
+    # identity check on the session's merge template (suffix required)
+    single = single.select(
+        "*",
+        F.col("__mname").alias("name_1"),
+        F.col("name").alias("name_2"),
+        F.lit(True).alias("req"),
+    )
+    name_ok = merge_template().isNotNull()
     mismatch = single.filter(~name_ok)
     ok = single.filter(name_ok)
 

@@ -24,7 +24,7 @@ from pyspark.sql.window import Window
 
 from palegislature_spark.er.blocking import self_block_pairs
 from palegislature_spark.er.components import connected_components
-from palegislature_spark.er.name_match import merge_names, name_struct
+from palegislature_spark.er.name_match import merge_template, name_struct
 
 ID_FIELDS = [
     "house_archive_id",
@@ -51,6 +51,10 @@ def candidate_pairs(members: DataFrame, service: DataFrame) -> DataFrame:
     """Match edges (id_1 < id_2, merged canonical name) from both blockings."""
     m = _with_name(members)
     payload = ["name", *ID_FIELDS]
+    pair_cols = [
+        "id_1", "id_2",
+        *[f"{c}_{i}" for i in (1, 2) for c in payload],
+    ]
 
     # Blocking 1: shared (year, chamber, lower(last)) service.
     svc_members = (
@@ -61,21 +65,27 @@ def candidate_pairs(members: DataFrame, service: DataFrame) -> DataFrame:
     )
     p1 = self_block_pairs(
         svc_members, "id", ["year", "chamber", "blk_last"], payload
-    ).withColumn("merged", merge_names(F.col("name_1"), F.col("name_2"), True))
+    ).select(*pair_cols, F.lit(True).alias("req"))
 
     # Blocking 2: shared non-null dob (suffix not required).
     dob_members = m.filter(F.col("dob").isNotNull()).select("dob", "id", *payload)
-    p2 = self_block_pairs(dob_members, "id", ["dob"], payload).withColumn(
-        "merged", merge_names(F.col("name_1"), F.col("name_2"), False)
+    p2 = self_block_pairs(dob_members, "id", ["dob"], payload).select(
+        *pair_cols, F.lit(False).alias("req")
     )
 
-    edges = p1.select("id_1", "id_2", "merged", *[f"{k}_1" for k in ID_FIELDS], *[f"{k}_2" for k in ID_FIELDS]).union(
-        p2.select("id_1", "id_2", "merged", *[f"{k}_1" for k in ID_FIELDS], *[f"{k}_2" for k in ID_FIELDS])
-    )
+    # One merge over both blockings: the suffix rule rides along as the
+    # ``req`` column, and the merge is evaluated inside the per-pair
+    # aggregate, so the plan carries the match expression once (as a
+    # projection it would be pushed into both union branches, and the
+    # NULL filter would copy it again).  A pair in both blockings that
+    # matches in both gets the same merged name: ``req`` only decides
+    # whether it is NULL.
     return (
-        edges.filter(F.col("merged").isNotNull() & _mergable())
-        .select("id_1", "id_2", "merged")
-        .dropDuplicates(["id_1", "id_2"])
+        p1.union(p2)
+        .filter(_mergable())
+        .groupBy("id_1", "id_2")
+        .agg(F.first(merge_template(), ignorenulls=True).alias("merged"))
+        .filter(F.col("merged").isNotNull())
     )
 
 

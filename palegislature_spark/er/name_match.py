@@ -28,7 +28,7 @@ import json
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from palegislature_spark.functions.expr_util import let, let2
+from palegislature_spark.functions.expr_util import cached_expr, let, let2
 from palegislature_spark.functions.names import parse_name, python_title
 
 # Directed nickname relation: lower(nick) -> lower(formal) names.
@@ -196,7 +196,9 @@ def _match_middle(m1: Column, m2: Column) -> Column:
     )
 
 
-def merge_names(n1: Column, n2: Column, require_suffix: bool = True) -> Column:
+def merge_names(
+    n1: Column, n2: Column, require_suffix: bool | Column = True
+) -> Column:
     """``is_same_name`` (names.py:96-149): canonical merged struct, or
     NULL when the names don't refer to the same person.
 
@@ -208,11 +210,28 @@ def merge_names(n1: Column, n2: Column, require_suffix: bool = True) -> Column:
     'F. Scott' first<->middle swap), middle reconciliation, suffix
     (equal always passes; one-sided only when ``require_suffix`` is
     False; conflicting suffixes never match).
+
+    ``require_suffix`` is data: a boolean Column (a Python bool becomes
+    a literal), so rows of one plan may differ in it while the
+    expression is built and compiled once -- see ``merge_template``.
     """
+    if not isinstance(require_suffix, Column):
+        require_suffix = F.lit(require_suffix)
     return let2(n1, n2, lambda a, b: _merge_impl(a, b, require_suffix))
 
 
-def _merge_impl(n1: Column, n2: Column, require_suffix: bool) -> Column:
+def merge_template() -> Column:
+    """``merge_names(name_1, name_2, req)`` over those fixed column
+    names, built once per SparkContext: callers alias their two name
+    structs and their suffix rule onto ``name_1``/``name_2``/``req``
+    instead of assembling the ~3.6k-node expression again."""
+    return cached_expr(
+        "merge_names",
+        lambda: merge_names(F.col("name_1"), F.col("name_2"), F.col("req")),
+    )
+
+
+def _merge_impl(n1: Column, n2: Column, require_suffix: Column) -> Column:
     f1, m1, l1, s1 = n1["first"], n1["middle"], n1["last"], n1["suffix"]
     f2, m2, l2, s2 = n2["first"], n2["middle"], n2["last"], n2["suffix"]
 
@@ -279,10 +298,7 @@ def _merge_impl(n1: Column, n2: Column, require_suffix: bool) -> Column:
     def _finish(lv, fv, middle_val, middle_raw_ok):
         middle_ok = fs1 | fs2 | (m1.isNull() & m2.isNull()) | middle_raw_ok
         sfx_equal = (s1 == s2) | (s1.isNull() & s2.isNull())
-        if require_suffix:
-            suffix_ok = sfx_equal
-        else:
-            suffix_ok = sfx_equal | s1.isNull() | s2.isNull()
+        suffix_ok = sfx_equal | (~require_suffix & (s1.isNull() | s2.isNull()))
         # Both firsts absent: the reference compares empty strings
         # ('' == '' -> match, names.py:96-105), so e.g. two suffix-
         # bearing 'Smith Jr.' records merge even though neither is
@@ -303,7 +319,9 @@ def _merge_impl(n1: Column, n2: Column, require_suffix: bool) -> Column:
     return let2(last_val, first_val, assemble)
 
 
-def names_match(n1: Column, n2: Column, require_suffix: bool = True) -> Column:
+def names_match(
+    n1: Column, n2: Column, require_suffix: bool | Column = True
+) -> Column:
     """Boolean form of merge_names."""
     return merge_names(n1, n2, require_suffix).isNotNull()
 

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from palegislature_spark.er.name_match import names_match
+from palegislature_spark.er.name_match import merge_template
 
 
 def name_violations(
@@ -29,11 +29,17 @@ def name_violations(
     ``is_same_name`` (suffix required — the crawl-time check is the
     strict one). Output: (key, existing name, incoming name).
     """
-    ex = existing.select(F.col(key), F.col("name").alias("existing_name"))
-    inc = incoming.select(F.col(key), F.col("name").alias("incoming_name"))
-    joined = inc.join(ex, key)
-    return joined.filter(
-        ~names_match(F.col("incoming_name"), F.col("existing_name"), True)
+    ex = existing.select(F.col(key), F.col("name").alias("name_2"))
+    inc = incoming.select(F.col(key), F.col("name").alias("name_1"))
+    return (
+        inc.join(ex, key)
+        .withColumn("req", F.lit(True))
+        .filter(merge_template().isNull())
+        .select(
+            key,
+            F.col("name_1").alias("incoming_name"),
+            F.col("name_2").alias("existing_name"),
+        )
     )
 
 

@@ -27,30 +27,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from palegislature_spark.er.name_match import (
+    merge_template,
     name_struct,
-    names_match,
     parse_vote_name,
 )
-
-# Unresolved-expression templates, built once per SparkContext.  The
-# match/parse when-trees are large enough that ASSEMBLING them over
-# py4j costs whole seconds of driver time; the assembled Column is an
-# immutable unresolved expression over fixed input names ("name",
-# "vname", "mname"), so it is reusable across every plan that binds
-# those names — the compile-the-regex-once discipline (guide §4.5),
-# applied to the driver.  This caches CODE (an expression template),
-# never data or results.
-_EXPR_CACHE: dict = {}
-
-
-def _cached_expr(key: str, build):
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    ck = (id(sc), key)
-    if ck not in _EXPR_CACHE:
-        _EXPR_CACHE[ck] = build()
-    return _EXPR_CACHE[ck]
+from palegislature_spark.functions.expr_util import cached_expr
 
 
 def roll_years(roll_calls: DataFrame, session_days: DataFrame) -> DataFrame:
@@ -116,7 +97,7 @@ def match_vote_names(
         .distinct()
         .select(
             "name",
-            _cached_expr(
+            cached_expr(
                 "parse_vote_name", lambda: parse_vote_name(F.col("name"))
             ).alias("vname"),
         )
@@ -152,16 +133,18 @@ def match_vote_names(
     # (name, member_id) determines (vname, mname) exactly.
     vname_d = vote_names.select("name", "vname", "blk").distinct()
     members_d = ros.select("member_id", "mname", "blk").distinct()
+    # The match runs on the session's one merge template (suffix not
+    # required: req = false), shared with merge_members.
     ok_pairs = (
         vname_d.join(F.broadcast(members_d), "blk")
-        .filter(
-            _cached_expr(
-                "names_match_nosfx",
-                lambda: names_match(
-                    F.col("vname"), F.col("mname"), require_suffix=False
-                ),
-            )
+        .select(
+            "name",
+            "member_id",
+            F.col("vname").alias("name_1"),
+            F.col("mname").alias("name_2"),
+            F.lit(False).alias("req"),
         )
+        .filter(merge_template().isNotNull())
         .select("name", "member_id")
     )
     cand = (

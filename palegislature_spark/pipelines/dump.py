@@ -2,8 +2,11 @@
 
 Shape: votes ⨝ roll_calls ⨝ session_days ⨝ sessions, completeness-
 gated (Q4), pivoted on member_id with an EXPLICIT values list from
-``service`` (avoids pivot's extra distinct scan — SURVEY §4.3.4),
-vote codes rendered as letters, blank = no record.
+``service`` (avoids pivot's extra distinct scan — SURVEY §4.3.4).
+The pivot carries the integer vote code (unknown codes NULL before
+the pivot), so Spark plans it as a hash aggregate + ``pivotfirst``
+instead of one string aggregate per member column; the CSV writer
+renders codes as letters (``codecs.VOTE_LETTERS``), blank = no record.
 
 Row order (``dump.py:43-60``): days by date; within a day, by stamp —
 unless any roll that day lacks a stamp, in which case the whole day
@@ -26,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from palegislature_spark.functions.codecs import vote_to_letter
+from palegislature_spark.functions.codecs import VOTE_LETTERS, vote_to_letter
 from palegislature_spark.pipelines.status import complete_keys
 
 
@@ -119,6 +122,8 @@ def vote_matrix(
     Returns (matrix df sorted in export order, column metadata list).
     The pivot uses the explicit member-id values list so Spark skips
     the distinct-scan planning step and column order is deterministic.
+    Cells hold the integer vote code, NULL = no record (or an unknown
+    code); ``export_matrices`` renders the letters.
     """
     cols = [
         r.asDict()
@@ -129,18 +134,36 @@ def vote_matrix(
         .collect()
     ]
     member_ids = [c["member_id"] for c in cols]
-    group = ordered.filter((F.col("year") == year) & (F.col("chamber") == chamber))
+    roll_cols = [
+        "roll_id", "roll_name", "number", "disp_stamp",
+        "day_date", "day_ord", "ord_stamp", "ord_id",
+    ]
+    group = ordered.filter(
+        (F.col("year") == year) & (F.col("chamber") == chamber)
+    ).select(*roll_cols)
     cells = votes.filter(F.col("member_id").isNotNull()).select(
-        "roll_id", "member_id", vote_to_letter("vote").alias("letter")
+        "roll_id",
+        "member_id",
+        F.when(vote_to_letter("vote").isNotNull(), F.col("vote")).alias("code"),
+    )
+    # The rows of ``group LEFT JOIN cells`` as an inner join plus one
+    # vote-less row per roll (its NULL member_id is in no pivot
+    # column, so a roll nobody voted on still yields its blank row).
+    # The inner join builds on the group's rolls; an outer join would
+    # build on the votes side, and every concurrent group pivot would
+    # broadcast the whole votes frame.  One shuffle on roll_id serves
+    # both pivot aggregates (per roll and member, then per roll).
+    rows = (
+        cells.join(F.broadcast(group), "roll_id")
+        .unionByName(group, allowMissingColumns=True)
+        .repartition("roll_id")
     )
     pivoted = (
-        group.join(cells, "roll_id", "left")
-        .groupBy(
-            "roll_id", "roll_name", "number", "disp_stamp",
-            "day_date", "day_ord", "ord_stamp", "ord_id",
-        )
+        rows.groupBy(*roll_cols)
         .pivot("member_id", member_ids)
-        .agg(F.first("letter"))
+        # first non-NULL code per cell, as a string pivot of first()
+        # picks (Spark rewrites it to ignore NULLs per pivot value)
+        .agg(F.first("code", ignorenulls=True))
         .orderBy(
             # day_ord second: equal-date day ENTITIES stay in
             # insertion order as separate blocks (see ordered_rolls).
@@ -173,6 +196,7 @@ def export_matrices(
     District and Party rows when any value is present; then one row
     per roll with letter cells, blank = no record.
     """
+    letters = {code: letter for letter, code in VOTE_LETTERS.items()}
     ordered = ordered_rolls(sessions, session_days, roll_calls).persist()
     columns = matrix_columns(members, service).persist()
     groups = [
@@ -215,10 +239,8 @@ def export_matrices(
             if any(parties):
                 w.writerow(["Party", "", ""] + ["" if p is None else p for p in parties])
             for row in matrix_rows:
-                cells = [
-                    "" if row[str(c["member_id"])] is None else row[str(c["member_id"])]
-                    for c in cols
-                ]
+                # NULL code (no record) -> blank cell
+                cells = [letters.get(row[str(c["member_id"])], "") for c in cols]
                 w.writerow([row["roll_name"], row["number"], row["disp_stamp"]] + cells)
         written.append(str(path))
     ordered.unpersist()

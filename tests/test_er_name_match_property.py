@@ -12,7 +12,7 @@ from __future__ import annotations
 import itertools
 
 from palegislature_spark.er import merge_names, name_struct
-from palegislature_spark.er.name_match import NICKNAMES
+from palegislature_spark.er.name_match import NICKNAMES, merge_template
 
 # ---------------------------------------------------------------------------
 # Python spec (independent restatement, not the implementation)
@@ -152,13 +152,21 @@ def gen_pairs():
     return pairs
 
 
+PAIR_SCHEMA = (
+    "f1 string, m1 string, l1 string, s1 string, "
+    "f2 string, m2 string, l2 string, s2 string"
+)
+
+
+def _as_tuple(got):
+    return None if got is None else (
+        got["first"], got["middle"], got["last"], got["suffix"]
+    )
+
+
 def test_merge_names_matches_spec(spark):
     pairs = gen_pairs()
-    df = spark.createDataFrame(
-        pairs,
-        "f1 string, m1 string, l1 string, s1 string, "
-        "f2 string, m2 string, l2 string, s2 string",
-    )
+    df = spark.createDataFrame(pairs, PAIR_SCHEMA)
     for require_suffix in (True, False):
         out = df.select(
             "f1", "m1", "l1", "s1", "f2", "m2", "l2", "s2",
@@ -175,12 +183,43 @@ def test_merge_names_matches_spec(spark):
                 (r["f2"], r["m2"], r["l2"], r["s2"]),
                 require_suffix,
             )
-            got = r["merged"]
-            got_t = None if got is None else (
-                got["first"], got["middle"], got["last"], got["suffix"]
-            )
+            got_t = _as_tuple(r["merged"])
             if got_t != want:
                 mismatches.append((r["f1"], r["m1"], r["l1"], r["s1"],
                                    r["f2"], r["m2"], r["l2"], r["s2"],
                                    got_t, want))
         assert not mismatches, mismatches[:5]
+
+
+def test_merge_template_matches_spec_in_one_plan(spark):
+    """The suffix rule as data: every pair appears once with req true
+    and once with req false, on different rows of ONE plan evaluated
+    through the shared template, and each row matches the spec for
+    its own req."""
+    pairs = gen_pairs()
+    df = spark.createDataFrame(
+        [p + (req,) for p in pairs for req in (True, False)],
+        PAIR_SCHEMA + ", req boolean",
+    )
+    out = df.select(
+        "*",
+        name_struct("f1", "m1", "l1", "s1").alias("name_1"),
+        name_struct("f2", "m2", "l2", "s2").alias("name_2"),
+    ).select(
+        "f1", "m1", "l1", "s1", "f2", "m2", "l2", "s2", "req",
+        merge_template().alias("merged"),
+    ).collect()
+    assert len(out) == 2 * len(pairs)
+    mismatches = [
+        tuple(r)
+        for r in out
+        if _as_tuple(r["merged"]) != spec_merge(
+            (r["f1"], r["m1"], r["l1"], r["s1"]),
+            (r["f2"], r["m2"], r["l2"], r["s2"]),
+            r["req"],
+        )
+    ]
+    assert not mismatches, mismatches[:5]
+    # the rule must actually differ between the two halves somewhere
+    matched = {(tuple(r)[:8], r["req"]): r["merged"] is not None for r in out}
+    assert any(matched[(k, False)] and not matched[(k, True)] for k, _ in matched)

@@ -98,6 +98,30 @@ def test_match_vote_names_two_passes(snow):
     assert "KRUGER" not in got  # misspelling stays unmatched
 
 
+def test_merge_template_built_once_per_session(snow, monkeypatch):
+    """merge_members then match_vote_names assemble the name-merge
+    expression once: every caller aliases its columns onto the one
+    template cached for the SparkContext."""
+    from palegislature_spark.er import name_match
+    from palegislature_spark.functions import expr_util
+
+    builds = []
+    real_merge_names = name_match.merge_names
+
+    def counting_merge_names(*args, **kwargs):
+        builds.append(args)
+        return real_merge_names(*args, **kwargs)
+
+    monkeypatch.setattr(expr_util, "_EXPR_CACHE", {})
+    monkeypatch.setattr(name_match, "merge_names", counting_merge_names)
+    members2, service2, _ = er.merge_members(snow["members"], snow["service"])
+    matches = er.match_vote_names(
+        snow["votes"], snow["roll_calls"], snow["session_days"], members2, service2
+    )
+    assert matches.count() > 0
+    assert len(builds) == 1
+
+
 def test_backfill_member_ids(snow):
     members2, service2, _ = er.merge_members(snow["members"], snow["service"])
     matches = er.match_vote_names(

@@ -144,3 +144,61 @@ def test_source_gate_single_corpus_pass(spark, sf_dir):
     # and the surviving corpus scan must be the narrow join-back
     # (doc_id + source), never a second full-text read
     assert "text" not in plan
+
+
+def _broadcast_subtrees(plan: str) -> list[str]:
+    """Each BroadcastExchange node of an adaptive plan's final tree
+    string, with its subtree."""
+    lines = plan.split("== Initial Plan ==")[0].splitlines()
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out = []
+    for i, line in enumerate(lines):
+        if not line[depth(line):].startswith("BroadcastExchange"):
+            continue
+        d, sub = depth(line), [line]
+        for nxt in lines[i + 1:]:
+            if depth(nxt) <= d:
+                break
+            sub.append(nxt)
+        out.append("\n".join(sub))
+    return out
+
+
+def test_vote_matrix_pivots_codes_and_broadcasts_rolls(spark):
+    """The House export pivot: integer codes plan as hash aggregates
+    with ``pivotfirst`` (no per-member string SortAggregate), and the
+    roll group is the broadcast build side — never the votes scan, which
+    every concurrent group pivot would otherwise broadcast whole."""
+    from palegislature_spark import er
+    from palegislature_spark.pipelines.dump import (
+        matrix_columns,
+        ordered_rolls,
+        vote_matrix,
+    )
+    from tests import snowflake_fixture
+
+    snow = snowflake_fixture.build(spark)
+    members2, service2, _ = er.merge_members(snow["members"], snow["service"])
+    matches = er.match_vote_names(
+        snow["votes"], snow["roll_calls"], snow["session_days"], members2, service2
+    )
+    years = er.vote_names.roll_years(snow["roll_calls"], snow["session_days"])
+    # checkpointed like a refresh's back-filled votes: a scan with no
+    # lineage, which the planner sizes as broadcastable
+    votes2 = er.backfill_member_ids(snow["votes"], matches, years).localCheckpoint()
+    ordered = ordered_rolls(snow["sessions"], snow["session_days"], snow["roll_calls"])
+    matrix, _ = vote_matrix(
+        votes2, ordered, matrix_columns(members2, service2), 2019, 1
+    )
+    matrix.collect()
+    plan = matrix._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    assert "pivotfirst" in plan
+    assert "SortAggregate" not in plan
+    broadcasts = _broadcast_subtrees(plan)
+    # the votes scan is the only one carrying the ``vote`` column
+    assert not [b for b in broadcasts if "vote#" in b], "votes are broadcast"
+    assert [b for b in broadcasts if "roll_name" in b.splitlines()[1]]

@@ -29,10 +29,12 @@ Exit 1 if any hard flag fires outside the allowlist.
 
 from __future__ import annotations
 
+import pathlib
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+# this checkout's root, wherever the script is run from
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 # Queries whose plans legitimately contain a nested-loop/cartesian
 # join: deliberately-registered EXACT baselines whose scale path

@@ -14,10 +14,12 @@ Usage: python tools/verify_bare.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# this checkout's root, wherever the script is run from
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from tools.verify_local import dtype_kind_mismatch, normalize, values_equal  # noqa: E402
 

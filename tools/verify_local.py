@@ -29,10 +29,12 @@ full gate bit-for-bit.
 from __future__ import annotations
 
 import math
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# this checkout's root, wherever the script is run from
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 
 def normalize(rows: list[tuple], cols: list[str]):
