@@ -154,8 +154,8 @@ def semantic_dedup_scale(spark, sf_dir: str, sf: float):
     from palegislature_spark.operators.similarity import semantic_dedup
 
     emb = load(spark, sf_dir, "embeddings")
-    # assignment impl sizing (expr below 1e5 vectors, arrow/BLAS at or
-    # above — ~8x cheaper at 200k, BASELINE second-decade notes) now
+    # assignment impl sizing (arrow_exact below 1e5 vectors, arrow/BLAS
+    # at or above — ~8x cheaper at 200k, BASELINE second-decade notes) now
     # lives INSIDE semantic_dedup (assign_impl=None auto-gate), so the
     # bench row runs the same default a production caller gets; the
     # sizing count is hoisted out of the timed region via the module
@@ -189,7 +189,7 @@ def ann_ivf_arrow(spark, sf_dir: str, sf: float):
     assignment (equality-tested vs the expression path in
     tests/test_ivf.py) and the parallel per-dimension Lloyd mean
     instead of the bit-replayable sequential fold. The registry
-    sibling keeps assign_impl='expr'/exact_replay=True because the
+    sibling keeps assign_impl='arrow_exact'/exact_replay=True because the
     DuckDB oracle must replay the build bit-for-bit; THIS row is what
     the suite total should quote as the engine's actual ANN build
     cost."""

@@ -470,7 +470,7 @@ def embedding_drift(
     vec_col: str = "embedding",
     n_lists: int | None = 8,
     threshold_milli: int = 100,
-    assign_impl: str = "expr",
+    assign_impl: str = "arrow_exact",
     n_vectors: int | None = None,
 ) -> DataFrame:
     """EMBEDDING distribution-shift report — the third leg of the

@@ -212,26 +212,34 @@ def bpe_merge_table(
     return spark.createDataFrame(merges, MERGE_SCHEMA)
 
 
-def _apply_bpe_arrow(
-    docs: DataFrame, rules: list, id_col: str, text_col: str
+def apply_bpe(
+    docs: DataFrame,
+    merge_table: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
 ) -> DataFrame:
-    """Shuffle-free encode: one mapInPandas pass with a per-task
-    word -> tokens memo (guide §4.5 heavyweight-init; §8 decide on
-    small rows — the dictionary is vocabulary-sized, the token stream
-    never shuffles).  Each DISTINCT word in a task is encoded once by
-    the same boundary-wrapped replace chain the expression twin (and
-    the DuckDB oracle) runs — Python ``str.replace`` is left-to-right
-    non-overlapping exactly like Java's/DuckDB's — and words
-    containing the \\x01/\\x02 delimiters take the same per-symbol
-    fold as the expression twin.  Replaces the explode + distinct +
-    dictionary-join + per-doc collect_list/sort reassembly: the whole
-    former plan shuffled the corpus token stream twice (join, regroup)
-    to reassemble an order the input rows already had.  Bit-equality
-    with the expression path is pinned in tests/test_bpe.py."""
+    """Tokenize with a learned merge table: per document,
+    (id, tokens array) after replaying every merge in step order.
+
+    The merge table is model-sized — collected once.  Encoding is one
+    shuffle-free mapInPandas pass with a per-task word -> tokens memo
+    (guide §4.5 heavyweight-init; a corpus repeats its vocabulary, so
+    each DISTINCT word in a task is encoded once).  A word is encoded
+    by the boundary-wrapped replace chain the DuckDB oracle runs —
+    Python ``str.replace`` is left-to-right non-overlapping exactly
+    like Java's/DuckDB's — and words containing the \\x01/\\x02
+    delimiters take the per-symbol left fold instead.  The token
+    stream never shuffles: the input rows already carry each
+    document's word order.  The expression twin, ``apply_bpe_expr`` in
+    tests/reference_impls.py, pins bit-equality (tests/test_bpe.py)."""
     import re
 
     import pandas as pd
 
+    rules = [
+        (r["left_sym"], r["right_sym"])
+        for r in merge_table.orderBy("step").collect()
+    ]
     out_schema = T.StructType(
         [
             docs.schema[id_col],
@@ -244,8 +252,8 @@ def _apply_bpe_arrow(
         toks = memo.get(w)
         if toks is None:
             if "\x01" in w or "\x02" in w:
-                # fold twin (delimiter collision): per-rule left fold
-                # over the symbol array, exactly _make_step
+                # delimiter collision: per-rule left fold over the
+                # symbol array
                 syms = list(w)
                 for a, b in rules:
                     merged = a + b
@@ -285,116 +293,3 @@ def _apply_bpe_arrow(
 
     return _fan_out(docs, id_col, text_col).mapInPandas(gen, out_schema)
 
-
-def apply_bpe(
-    docs: DataFrame,
-    merge_table: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_vocab: bool = False,
-    encode_impl: str = "arrow",
-) -> DataFrame:
-    """Tokenize with a learned merge table: per document,
-    (id, tokens array) after replaying every merge in step order.
-
-    The merge table is model-sized — collected once and applied as a
-    chain of folds. The folds run over the DISTINCT-word dictionary,
-    not the token stream: a corpus repeats its vocabulary (Zipf —
-    token count >> distinct words at any scale), so encoding each
-    distinct word once and broadcast-joining the word->tokens
-    dictionary back onto the positions turns the expensive
-    interpreted fold from O(corpus tokens x merges) into
-    O(vocabulary x merges) + one linear join (measured ~8x on the
-    sf0.1 bench corpus). Reassembly is a per-document sorted
-    collect — bounded by document length, the same per-doc grain as
-    winnowing. Output is bit-identical to folding each document's
-    words in place (the fold is a pure per-word function).
-
-    ``encode_impl='arrow'`` (default) runs the shuffle-free
-    mapInPandas kernel (:func:`_apply_bpe_arrow` — per-task word
-    memo, zero exchanges, bit-equal output pinned in
-    tests/test_bpe.py); ``'expr'`` keeps this expression path, the
-    plan the DuckDB oracle structurally mirrors.
-
-    ``broadcast_vocab`` (expr impl only) forces the dictionary join
-    to broadcast.
-    Default OFF: a space-split vocabulary GROWS with the corpus
-    (Heaps' law — a web corpus's URLs/typos/numbers reach hundreds of
-    millions of distinct words), so the safe default lets the
-    optimizer/AQE pick the strategy and fall back to a shuffle join;
-    pass True only when the vocabulary is known bounded (a curated
-    corpus, or post-normalization)."""
-    rules = [
-        (r["left_sym"], r["right_sym"])
-        for r in merge_table.orderBy("step").collect()
-    ]
-    if encode_impl == "arrow":
-        return _apply_bpe_arrow(docs, rules, id_col, text_col)
-    if encode_impl != "expr":
-        raise ValueError(f"unknown encode_impl: {encode_impl}")
-    word_pos = docs.select(
-        F.col(id_col),
-        F.posexplode(
-            F.filter(F.split(text_col, " "), lambda w: w != "")
-        ).alias("pos", "w"),
-    )
-    vocab = word_pos.select("w").distinct()
-    # fast path: the oracle-equivalent boundary-wrapped string replay —
-    # one native replace per rule.  A word containing \x01/\x02 would
-    # collide with the wrap delimiters, so those rows take the fold
-    # twin (the original interpreted construction); the conditional is
-    # evaluated per row and the untaken branch costs nothing at
-    # runtime.  Trained rule symbols never contain the control chars
-    # (vocabulary() excludes them), so the split is exhaustive.
-    scol = _wrap(F.col("w"))
-    fold_col = F.split("w", "")
-    for a, b in rules:
-        scol = _replace_merge(scol, a, b)
-        # PySpark's higher-order-function bridge inspects lambda
-        # signatures (default args would read as extra lambda params),
-        # so each rule's fold is built by a closure factory
-        fold_col = _fold_syms(fold_col, _make_step(a, b))
-    col = F.when(
-        F.col("w").contains("\x01") | F.col("w").contains("\x02"),
-        fold_col,
-    ).otherwise(_unwrap_toks(scol))
-    word_toks = vocab.select("w", col.alias("toks"))
-    if broadcast_vocab:
-        word_toks = F.broadcast(word_toks)
-    rebuilt = (
-        word_pos.join(word_toks, "w")
-        .groupBy(id_col)
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "toks"))),
-                    lambda s: s["toks"],
-                )
-            ).alias("tokens")
-        )
-    )
-    # documents with no non-empty words still get a row (empty array)
-    return docs.select(id_col).join(rebuilt, id_col, "left").select(
-        id_col,
-        F.coalesce(
-            "tokens", F.expr("array()").cast("array<string>")
-        ).alias("tokens"),
-    )
-
-
-def _make_step(a: str, b: str):
-    merged = a + b
-
-    def step(acc, s):
-        last = F.when(F.size(acc) > 0, F.element_at(acc, -1))
-        return F.when(
-            (last == F.lit(a)) & (s == F.lit(b)),
-            F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(merged))),
-        ).otherwise(F.concat(acc, F.array(s)))
-
-    return step
-
-
-def _fold_syms(col, step):
-    """Fold one symbol-array column through a merge step."""
-    return F.aggregate(col, F.expr("array()").cast("array<string>"), step)

@@ -19,8 +19,10 @@ Shape discipline: signatures (MinHash mins, SimHash bit votes) are
 computed per-row over the token/shingle ARRAY with array expressions
 — zero shuffles until the candidate join. The only exchanges left
 are the ones the algorithms require (bucket join, inverted-index
-join). Everything is built-in-function-only (no Python UDFs): md5 /
-xxhash64 / conv / bit ops are whole-stage-codegen expressions.
+join). MinHash and the joins are built-in expressions (md5 / xxhash64 /
+conv / bit ops are whole-stage-codegen); winnowing and SimHash
+signatures are Arrow kernels, each pinned bit-equal to an expression
+twin in tests/reference_impls.py.
 """
 
 from __future__ import annotations
@@ -31,7 +33,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from palegislature_spark.functions.expr_util import let
 
 # --------------------------------------------------------------------------
 # Exact dedup (hash-groupBy)
@@ -169,7 +170,6 @@ def winnow_fingerprints(
     k: int = 5,
     w: int = 4,
     base: int = 257,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Winnowing document fingerprints (Karp-Rabin rolling-hash selection).
 
@@ -184,80 +184,21 @@ def winnow_fingerprints(
     sketch. Output: (id, fingerprint: long) rows, one linear pass
     until the caller aggregates.
 
-    Expression discipline (the r1 perf lesson): the char-code and
-    gram arrays are ``let``-bound lambda variables, so each is
-    evaluated once per row.  Inlining them instead makes every window
-    position re-evaluate the whole gram subtree inside interpreted
-    higher-order functions — O(L*w) gram recomputations per row,
-    which measured 224s at sf0.01 in round 1 vs <2s for this form.
+    Winnowing's inner loop is inherently per-position sequential work,
+    which interpreted Catalyst higher-order functions execute one
+    lambda call at a time; this runs it vectorized over Arrow batches
+    — three numpy passes (codepoints via utf-32 decode, gram hashes via
+    a sliding-window matmul, window minima via a strided view) —
+    measured ~5x faster at sf0.1 (0.6s vs 3.0s warm) than the
+    expression form.  That expression twin (the shape the DuckDB
+    oracle replays) is ``winnow_fingerprints_expr`` in
+    tests/reference_impls.py; tests/test_dedup.py pins the two
+    fingerprint sets bit-identical.
     Overflow: max code 0x10FFFF * base^(k-1) * k must stay < 2^63 —
     holds for the defaults (k=5, base=257) by ~380x.
     """
     if base ** (k - 1) * 0x110000 * k >= 2**63:
         raise ValueError(f"k={k}, base={base} would overflow 64-bit gram hashes")
-    if impl == "arrow":
-        return _winnow_fingerprints_arrow(df, id_col, text_col, k, w, base)
-    if impl != "expr":
-        raise ValueError(f"unknown winnow impl: {impl}")
-
-    def grams_of(codes):  # codes: bound array<long> of char codes
-        # Guarded so the expression is total: Catalyst may reorder the
-        # row filter below with the projection, so a too-short text
-        # must yield NULL here, not an element_at out-of-bounds.
-        return F.when(
-            F.size(codes) >= k,
-            F.transform(
-                F.sequence(F.lit(1), F.size(codes) - (k - 1)),
-                lambda i: sum(
-                    (
-                        F.element_at(codes, i + t) * F.lit(base ** (k - 1 - t))
-                        for t in range(1, k)
-                    ),
-                    start=F.element_at(codes, i) * F.lit(base ** (k - 1)),
-                ),
-            ),
-        )
-
-    def wins_of(g):  # g: bound array<long> of gram hashes
-        return F.when(
-            F.size(g) >= w,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.size(g) - (w - 1)),
-                    lambda j: F.array_min(F.slice(g, j, w)),
-                )
-            ),
-        )
-
-    # split('') chars the string in ONE pass; per-position substr()
-    # inside a transform would re-scan the string per char (O(L^2)).
-    codes = F.transform(
-        F.split(F.col(text_col), ""), lambda c: F.ascii(c).cast("long")
-    )
-    fps = let(codes, lambda c: let(grams_of(c), wins_of))
-    return (
-        df.filter(F.length(text_col) >= k)
-        .repartition(F.col(id_col))
-        .select(F.col(id_col), fps.alias("__fps"))
-        .filter(F.col("__fps").isNotNull())
-        .select(id_col, F.explode("__fps").alias("fingerprint"))
-    )
-
-
-def _winnow_fingerprints_arrow(
-    df: DataFrame, id_col: str, text_col: str, k: int, w: int, base: int
-) -> DataFrame:
-    """Vectorized winnowing over Arrow batches (the default impl).
-
-    Winnowing's inner loop is inherently per-position sequential work,
-    which interpreted Catalyst higher-order functions execute one
-    lambda call at a time; numpy does the same arithmetic as three
-    vectorized passes (codepoints via utf-32 decode, gram hashes via a
-    sliding-window matmul, window minima via a strided view) —
-    measured ~5x faster at sf0.1 (0.6s vs 3.0s warm) with a
-    bit-identical fingerprint set, which the cross-impl equality test
-    pins.  The ``expr`` impl remains the pure-JVM reference twin (and
-    the shape the DuckDB oracle replays)."""
     import numpy as np
 
     from pyspark.sql import types as T
@@ -277,8 +218,8 @@ def _winnow_fingerprints_arrow(
         for pdf in batches:
             ids, fps = [], []
             for did, text in zip(pdf[id_col], pdf[text_col]):
-                # NULL/short text: drop the row, matching the expr
-                # impl's length(text) >= k filter semantics
+                # NULL/short text: drop the row, matching the
+                # expression twin's length(text) >= k filter
                 if not isinstance(text, str) or len(text) < k:
                     continue
                 # utf-32-le decode = exact codepoints, matching F.ascii
@@ -365,159 +306,33 @@ def _verify_pairs_by_array(
     ).filter(F.col("jaccard") >= threshold)
 
 
-def _xxh64_long_np(v, seed):
-    """numpy twin of Spark's XXH64.hashLong — bit-exact (pinned in
-    tests/test_dedup.py against F.xxhash64 itself). uint64 wrapping
-    arithmetic everywhere; `v` may be any uint64 ndarray, `seed` a
-    scalar or broadcastable ndarray."""
-    import numpy as np
-
-    P1 = np.uint64(0x9E3779B185EBCA87)
-    P2 = np.uint64(0xC2B2AE3D27D4EB4F)
-    P3 = np.uint64(0x165667B19E3779F9)
-    P4 = np.uint64(0x85EBCA77C2B2AE63)
-    P5 = np.uint64(0x27D4EB2F165667C5)
-    h = seed + P5 + np.uint64(8)
-    k1 = v * P2
-    k1 = (k1 << np.uint64(31)) | (k1 >> np.uint64(33))
-    k1 = k1 * P1
-    h = h ^ k1
-    h = ((h << np.uint64(27)) | (h >> np.uint64(37))) * P1 + P4
-    h ^= h >> np.uint64(33)
-    h *= P2
-    h ^= h >> np.uint64(29)
-    h *= P3
-    h ^= h >> np.uint64(32)
-    return h
-
-
-def _xxh64_int_np(v, seed):
-    """numpy twin of Spark's XXH64.hashInt (4-byte input) — bit-exact,
-    same pinning as :func:`_xxh64_long_np`."""
-    import numpy as np
-
-    P1 = np.uint64(0x9E3779B185EBCA87)
-    P2 = np.uint64(0xC2B2AE3D27D4EB4F)
-    P3 = np.uint64(0x165667B19E3779F9)
-    P5 = np.uint64(0x27D4EB2F165667C5)
-    h = seed + P5 + np.uint64(4)
-    h = h ^ ((v & np.uint64(0xFFFFFFFF)) * P1)
-    h = ((h << np.uint64(23)) | (h >> np.uint64(41))) * P2 + P3
-    h ^= h >> np.uint64(33)
-    h *= P2
-    h ^= h >> np.uint64(29)
-    h *= P3
-    h ^= h >> np.uint64(32)
-    return h
-
-
 def minhash_band_keys(
     sharr: DataFrame,
     id_col: str,
     num_hashes: int = 32,
     bands: int = 16,
-    impl: str = "expr",
 ) -> DataFrame:
     """(id, band, band_key) from a per-doc hashed-shingle ARRAY frame
-    — the banded LSH key construction of :func:`minhash_lsh_pairs`,
-    factored out with two bit-identical implementations.
-
-    ``impl='expr'`` (default): the JVM expression construction
-    (:func:`minhash_signatures` + the band hash array) — codegen'd
-    map-side-combined aggregates, and the MEASURED winner at both
-    scales (see below).
-
-    ``impl='arrow'``: one mapInPandas pass — per-shingle family
-    hashes, per-doc SIGNED minima, and per-band keys in wrapping
-    uint64 numpy via the :func:`_xxh64_long_np`/:func:`_xxh64_int_np`
-    twins of Spark's own XXH64; BIT-EQUAL to the expression path
-    (pinned in tests/test_dedup.py).  Built on the r12 §7 theory that
-    vectorizing the hash family would pay — MEASURED NEGATIVE both
-    at sf0.1 (wash: 1.12 vs 1.14s in the full pipeline) and at the
-    100x replica (expr 4.3s vs arrow 6-12s min-of-2, same JVM): the
-    Arrow round-trip of the shingle arrays costs more than the
-    trivial per-element hash work saves, exactly the r12 §8
-    pagerank-fold result.  Kept as the equality anchor and the
-    recorded negative result.
+    — the banded LSH key construction of :func:`minhash_lsh_pairs`:
+    :func:`minhash_signatures` (codegen'd, map-side-combined min
+    aggregates) plus one xxhash64 per band.  It stays an expression
+    because a bit-equal numpy XXH64 kernel measured no faster at sf0.1
+    (1.12 vs 1.14s) and slower at the 100x replica (4.3s vs 6-12s):
+    the Arrow round-trip of the shingle arrays costs more than the
+    per-element hash work it saves.
     """
     rows = num_hashes // bands
-    if impl == "expr":
-        sh = sharr.select(id_col, F.explode("sha").alias("sh_hash"))
-        sig = minhash_signatures(sh, id_col, num_hashes)
-        band_arr = F.array(
-            *[
-                F.xxhash64(*[F.col(f"h{b * rows + r}") for r in range(rows)])
-                for b in range(bands)
-            ]
-        )
-        return sig.select(
-            F.col(id_col), F.posexplode(band_arr).alias("band", "band_key")
-        )
-    if impl != "arrow":
-        raise ValueError(f"unknown minhash band impl: {impl}")
-
-    import numpy as np
-
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            sharr.schema[id_col],
-            T.StructField("band", T.IntegerType(), False),
-            T.StructField("band_key", T.LongType()),
+    sh = sharr.select(id_col, F.explode("sha").alias("sh_hash"))
+    sig = minhash_signatures(sh, id_col, num_hashes)
+    band_arr = F.array(
+        *[
+            F.xxhash64(*[F.col(f"h{b * rows + r}") for r in range(rows)])
+            for b in range(bands)
         ]
     )
-    seeds = np.arange(num_hashes, dtype=np.uint64)
-
-    def gen(batches):
-        import pandas as pd
-
-        np.seterr(over="ignore")
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            lens = pdf["sha"].map(len).to_numpy(dtype=np.int64)
-            keep = lens > 0
-            pdf = pdf[keep]
-            lens = lens[keep]
-            if not len(pdf):
-                continue
-            flat = np.concatenate(
-                [np.asarray(a, dtype=np.int64) for a in pdf["sha"]]
-            ).view(np.uint64)
-            # family member i of shingle s: xxhash64(s, i) =
-            # hashInt(i, hashLong(s, 42)) — hashLong shared across i
-            base = _xxh64_long_np(flat, np.uint64(42))
-            fam = _xxh64_int_np(seeds[None, :], base[:, None])
-            offs = np.zeros(len(lens), dtype=np.int64)
-            np.cumsum(lens[:-1], out=offs[1:])
-            # Spark's min() over LongType is a SIGNED comparison —
-            # reduce over the int64 view, then hash the same bits
-            sig = np.minimum.reduceat(
-                fam.view(np.int64), offs, axis=0
-            ).view(np.uint64)  # (docs, k)
-            # band key b over members [b*rows, ..., b*rows+rows-1]:
-            # xxhash64(h0, h1, ...) folds hashLong left-to-right
-            keys = np.empty((len(lens), bands), dtype=np.uint64)
-            for b in range(bands):
-                k = _xxh64_long_np(
-                    sig[:, b * rows], np.uint64(42)
-                )
-                for r in range(1, rows):
-                    k = _xxh64_long_np(sig[:, b * rows + r], k)
-                keys[:, b] = k
-            ids = pdf[id_col].to_numpy()
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(ids, bands),
-                    "band": np.tile(
-                        np.arange(bands, dtype=np.int32), len(lens)
-                    ),
-                    "band_key": keys.reshape(-1).view(np.int64),
-                }
-            )
-
-    return sharr.select(id_col, "sha").mapInPandas(gen, out_schema)
+    return sig.select(
+        F.col(id_col), F.posexplode(band_arr).alias("band", "band_key")
+    )
 
 
 def minhash_lsh_pairs(
@@ -575,15 +390,8 @@ def minhash_lsh_pairs(
         )
         .localCheckpoint(eager=False)
     )
-    # band keys via the EXPRESSION construction: the vectorized twin
-    # (minhash_band_keys impl='arrow') is bit-equal but measured
-    # SLOWER at the 100x replica (4.3s vs 6-12s min-of-2, same JVM —
-    # the Arrow round-trip of the shingle arrays dwarfs the
-    # codegen'd map-side-combined 32-min aggregates; the r12
-    # pagerank-fold lesson repeating) and a wash at sf0.1 (1.12 vs
-    # 1.14s).  The kernel stays as the equality-pinned negative
-    # result.
-    band_key = minhash_band_keys(sharr, id_col, num_hashes, bands, impl="expr")
+    # expression band keys: the measured winner at both scales
+    band_key = minhash_band_keys(sharr, id_col, num_hashes, bands)
     # b1/b2 below are DIFFERENT projections of this frame, so exchange
     # reuse never fires and the shingle+signature pipeline would run
     # twice inside the candidate join alone (guide §2.4: two consumers,
@@ -625,9 +433,7 @@ def minhash_lsh_pairs(
 _SIMHASH_BITS = 60
 
 
-def simhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, impl: str = "arrow"
-) -> DataFrame:
+def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """60-bit SimHash per document from token md5s: (id, simhash).
 
     Token weight = occurrence count (the full token array is folded,
@@ -636,63 +442,18 @@ def simhash_signatures(
     nibbles => 60 bits, fits a BIGINT). md5 is used (not xxhash64) so
     external engines can reproduce the signature exactly.
 
-    ``impl='arrow'`` (default): one shuffle-free mapInPandas pass —
-    per-task token->md5 memo (Zipf: tokens repeat corpus-wide, guide
-    §4.5), numpy bit extraction and vote sums.  BIT-IDENTICAL to the
-    expression twin by construction: the whole computation is integer
-    (md5 nibbles, shifts, counts) with no float anywhere, so there is
-    no rounding to re-order — pinned in tests/test_dedup.py.  It also
-    removes the token-explode exchange: the r12 plan paid one shuffle
-    of (id, 60 partial sums) rows; this pass emits one (id, simhash)
-    row per document with zero exchanges — the better 100 TB shape
-    (the signature stage becomes a pure map over the corpus scan).
-
-    ``impl='expr'`` — the JVM expression twin the DuckDB oracle
-    structurally mirrors: explode tokens, md5 once per token row,
-    convert the first 15 hex nibbles to ONE 60-bit long per row
-    (single conv), then 60 integer-shift partial sums in a single
-    groupBy(id) — map-side combine shrinks the shuffle to one
-    61-column row per document. Bit numbering matches the nibble
-    definition exactly: bit i lives in hex nibble i//4 at in-nibble
-    position i%4, and nibble p of the big-endian 15-nibble number
-    sits at integer bit 4*(14-p). (An array-fold version with
-    aggregate() was tried and is ~3x slower: higher-order lambdas are
-    interpreted, these sum exprs are codegen'd.)
+    One shuffle-free mapInPandas pass — per-task token->md5 memo
+    (Zipf: tokens repeat corpus-wide, guide §4.5), numpy bit
+    extraction and vote sums — emitting one (id, simhash) row per
+    document with zero exchanges, so the signature stage is a pure map
+    over the corpus scan.  NULL-text rows drop.  The expression twin
+    the DuckDB oracle structurally mirrors (token explode + 60
+    integer-shift partial sums in one groupBy) is
+    ``simhash_signatures_expr`` in tests/reference_impls.py; the two
+    are BIT-IDENTICAL by construction — the whole computation is
+    integer (md5 nibbles, shifts, counts), so there is no rounding to
+    re-order — and tests/test_dedup.py pins it.
     """
-    if impl == "arrow":
-        return _simhash_signatures_arrow(df, id_col, text_col)
-    if impl != "expr":
-        raise ValueError(f"unknown simhash impl: {impl}")
-    hexed = (
-        df.repartition(F.col(id_col))
-        .select(
-            F.col(id_col),
-            F.explode(F.split(F.col(text_col), " ")).alias("__tok"),
-        )
-        .withColumn(
-            "bits", F.expr("CAST(conv(substring(md5(__tok), 1, 15), 16, 10) AS BIGINT)")
-        )
-    )
-
-    def vote(i: int):
-        shift = 4 * (14 - i // 4) + (i % 4)
-        return F.expr(f"sum(2 * (shiftright(bits, {shift}) & 1) - 1)").alias(f"s{i}")
-
-    votes = hexed.groupBy(id_col).agg(*[vote(i) for i in range(_SIMHASH_BITS)])
-    hash_expr = " + ".join(
-        f"(CASE WHEN s{i} > 0 THEN CAST({1 << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        for i in range(_SIMHASH_BITS)
-    )
-    return votes.select(id_col, F.expr(hash_expr).alias("simhash"))
-
-
-def _simhash_signatures_arrow(
-    df: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """Shuffle-free SimHash (the ``impl='arrow'`` path of
-    :func:`simhash_signatures` — see its docstring for the equality
-    argument).  NULL-text rows drop, exactly as the expression twin's
-    explode of a NULL token array emits no rows for them."""
     import numpy as np
 
     from pyspark.sql import types as T
@@ -1011,7 +772,7 @@ def minhash_index(
     sharr = shingle_arrays(df, id_col, text_col, n).select(
         id_col, F.transform("sh", lambda s: F.xxhash64(s)).alias("sha")
     )
-    return minhash_band_keys(sharr, id_col, num_hashes, bands, impl="expr")
+    return minhash_band_keys(sharr, id_col, num_hashes, bands)
 
 
 # --------------------------------------------------------------------------

@@ -27,20 +27,12 @@ ordered ``list_reduce`` — the same dual-path discipline as the IVF
 Lloyd refinement (scale default + bit-reproducible twin for the
 oracle-pinned registry query).
 
-``fold_impl`` selects how the ordered fold executes.  The r12
-optimization round built an Arrow-batched numpy twin
-(``fold_impl='arrow'``, bit-equality pinned in tests/test_graph.py
-across batch regimes) on the theory that the interpreted HOF
-aggregate — which never enters whole-stage codegen — was the fold's
-cost.  Measurement says otherwise ACROSS SCALES: the kernel wins
-~8% on the sf0.1 supplier graph (3.2s vs 3.5s) but loses 3x at the
-100x replica (209s vs 67s, min-of-2 idle) — the kernel's
-repartition+full-partition-sort and the 45M-row-per-round Arrow
-round-trip dwarf the interpreted fold, while the expression path's
-ObjectHashAggregate does JVM map-side partial_collect_list with no
-Python boundary and no global sort.  The EXPRESSION fold is
-therefore the default and the 100 TB configuration; the kernel is
-kept as the measured negative result and equality anchor.
+The exact fold is one expression: a JVM ObjectHashAggregate
+(map-side partial_collect_list, no Python boundary, no global sort).
+It stays an expression because a bit-equal Arrow numpy fold measured
+3x slower at the 100x replica (209s vs 67s): its repartition, full
+partition sort and per-round Arrow round-trip outweigh the
+interpreted fold.
 """
 
 from __future__ import annotations
@@ -51,105 +43,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _fold_sums_arrow(contribs: DataFrame) -> DataFrame:
-    """(dst, s): each destination's incoming contributions folded
-    sequentially in source-id order — the Arrow twin of the
-    exact_replay HOF aggregate (collect_list -> array_sort -> left
-    fold), bit-identical by the codec-kernel argument (same IEEE adds
-    in the same order, one rounding per step — per-segment np.cumsum
-    for long segments, a depth loop across destinations for short
-    ones; see the strategy comment in ``gen`` for the measured
-    regimes).  The 0.0 init matches the fold's zero literal (0.0 + x == x
-    for every value the graph produces; contributions are rank/deg,
-    never -0.0).  Cost shape is unchanged — one hash exchange on dst
-    either way (partial_collect_list ships every element too) — but
-    the per-element work leaves the expression interpreter.  Rows
-    reach the kernel partition-sorted by (dst, src), the same Spark
-    UTF8-binary order array_sort applies to the (src, c) structs (src
-    is unique per group: the edge list is DISTINCT); a group spanning
-    Arrow batches is carried via the running accumulator.
-    """
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [contribs.schema["dst"], T.StructField("s", T.DoubleType())]
-    )
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        carry_key, carry_acc, have_carry = None, 0.0, False
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            dst = pdf["dst"].to_numpy()
-            c = pdf["c"].to_numpy(dtype="float64")
-            starts = np.flatnonzero(np.r_[True, dst[1:] != dst[:-1]])
-            ends = np.r_[starts[1:], len(dst)]
-            n_seg = len(starts)
-            acc = np.zeros(n_seg, dtype=np.float64)
-            seed0 = 0.0
-            done_key, done_sum, have_done = None, 0.0, False
-            if have_carry:
-                if dst[0] == carry_key:
-                    # continue the spanning group's fold where it left off
-                    seed0 = carry_acc
-                else:
-                    done_key, done_sum, have_done = carry_key, carry_acc, True
-                have_carry = False
-            # Two bit-equal fold strategies (both are the sequential
-            # left fold — one rounding per element in (dst, src)
-            # order), picked per batch by segment shape:
-            #  * LONG segments (high in-degree, few groups per batch —
-            #    the 100x supplier graph): per-segment np.cumsum, whose
-            #    output is definitionally every sequential partial sum;
-            #    a depth loop here degenerates to in-degree-many numpy
-            #    calls on tiny index arrays (measured 2.5 ms vs 0.1 ms
-            #    per 10k-row batch).
-            #  * SHORT segments (many groups per batch): a depth loop —
-            #    step j adds every group's j-th contribution; cumsum
-            #    here pays one Python-loop iteration per GROUP
-            #    (measured 13 ms vs 0.2 ms per batch).
-            if n_seg * 8 <= len(dst):
-                for g in range(n_seg):
-                    seg = c[starts[g] : ends[g]]
-                    if g == 0 and seed0 != 0.0:
-                        seg = np.r_[seed0, seg]
-                    acc[g] = np.cumsum(seg)[-1]
-            else:
-                acc[0] = seed0
-                idx = starts.copy()
-                active = np.arange(n_seg)
-                while active.size:
-                    acc[active] += c[idx[active]]
-                    idx[active] += 1
-                    active = active[idx[active] < ends[active]]
-            # the last group may continue in the next batch
-            carry_key, carry_acc, have_carry = (
-                dst[starts[-1]],
-                float(acc[-1]),
-                True,
-            )
-            if n_seg > 1 or have_done:
-                out = pd.DataFrame({"dst": dst[starts[:-1]], "s": acc[:-1]})
-                if have_done:
-                    out = pd.concat(
-                        [pd.DataFrame({"dst": [done_key], "s": [done_sum]}), out],
-                        ignore_index=True,
-                    )
-                yield out
-        if have_carry:
-            yield pd.DataFrame({"dst": [carry_key], "s": [carry_acc]})
-
-    return (
-        contribs.repartition("dst")
-        .sortWithinPartitions("dst", "src")
-        .select("dst", "c")
-        .mapInPandas(gen, out_schema)
-    )
-
-
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -158,7 +51,6 @@ def pagerank(
     damping: float = 0.85,
     exact_replay: bool = False,
     ckpt_every: int = 5,
-    fold_impl: str = "expr",
 ) -> DataFrame:
     """(node, rank) after ``iters`` damped propagation rounds over the
     DISTINCT directed edge list. Dangling nodes (no out-edges) simply
@@ -225,9 +117,7 @@ def pagerank(
             .join(_bcast(deg), "src")
             .select("dst", "src", (F.col("rank") / F.col("deg")).alias("c"))
         )
-        if exact_replay and fold_impl == "arrow":
-            sums = _fold_sums_arrow(contribs)
-        elif exact_replay:
+        if exact_replay:
             sums = contribs.groupBy("dst").agg(
                 F.aggregate(
                     F.transform(

@@ -18,12 +18,11 @@ Design for the oracle (same discipline as ``ivf_assignments``):
   (``_mix31``), i.e. the IVF-flat sampled-point construction sliced
   per subspace.  Deterministic, no stored model, and the DuckDB twin
   replays the identical pick in SQL.
-* **encode** — the tiny codebook (m*k sub-vectors) is collected and
-  constant-folded into ONE ``from_json`` literal (the
-  ``max_cosine_vs_eval`` precedent), so encoding is a single linear
-  codegen pass: per subspace, argmin of the in-order-folded squared
-  L2 distance, first-minimum tie-break (= smallest code id).  Zero
-  shuffles, zero explodes, no Python.
+* **encode** — the tiny codebook (m*k sub-vectors) is collected once
+  and every corpus vector is encoded by one Arrow-batched numpy pass:
+  per subspace, argmin of the in-order-folded squared L2 distance,
+  first-minimum tie-break (= smallest code id).  Zero shuffles, zero
+  explodes; the folds are bit-equal to the SQL twin's.
 * **ADC serve** — per query, the (sub_id, code_id) -> squared-L2
   table is equi-joined (broadcast) to the exploded corpus codes, and
   the approximate distance is the SUB-ID-ORDERED fold of the m table
@@ -168,50 +167,29 @@ def pq_encode(
     codebooks: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    encode_impl: str = "arrow",
 ) -> DataFrame:
     """Encode every vector as its m nearest sub-centroid codes:
     (id_col, codes array<int>) with codes[j] the code_id whose
     subspace-j centroid minimizes in-order-folded squared L2
     (first-minimum tie-break = smallest code_id).
 
-    One linear pass either way; the two implementations produce
-    BIT-IDENTICAL codes (equality pinned in tests/test_pq.py):
-
-    * ``encode_impl='arrow'`` (default) — Arrow-batched numpy kernel.
-      The distance accumulator runs dimension-SEQUENTIALLY
-      (``acc += (v_i - c_i)^2`` one dimension at a time, vectorized
-      across the rows of the batch), so every per-code distance is the
-      SAME left-folded IEEE sum the expression path computes — this is
-      the multimodal-codec discipline (same ops, same order, across
-      rows instead of down them), NOT the BLAS re-association the
-      ``assign_arrow`` docstring warns about.  ``np.argmin`` ties to
-      the first minimum = smallest code_id, matching
-      ``array_position(dists, array_min(dists))``.  Cuts the ~m*k
-      interpreted higher-order-function folds per row (the measured
-      cost: ~0.6 ms/row at m=4, k=16, dim=64) to one vectorized pass.
-    * ``encode_impl='expr'`` — the pure-expression twin (codebook as a
-      folded literal, HOF fold per code), kept as the equality anchor
-      and for plans that must stay Python-free.
+    One linear pass of an Arrow-batched numpy kernel.  The distance
+    accumulator runs dimension-SEQUENTIALLY (``acc += (v_i - c_i)^2``
+    one dimension at a time, vectorized across the rows of the batch),
+    so every per-code distance is the SAME left-folded IEEE sum
+    ``_sq_l2`` computes — the multimodal-codec discipline (same ops,
+    same order, across rows instead of down them), NOT the BLAS
+    re-association the ``assign_arrow`` docstring warns about.
+    ``np.argmin`` ties to the first minimum = smallest code_id,
+    matching ``array_position(dists, array_min(dists))``.  The
+    expression twin (codebook as a folded literal, HOF fold per code —
+    ~m*k interpreted folds per row, measured ~0.6 ms/row at m=4, k=16,
+    dim=64) is ``pq_encode_expr`` in tests/reference_impls.py, which
+    pins the codes bit-for-bit (tests/test_pq.py).
 
     This is the compression step — dim doubles -> m small ints per
     vector (64x at dim=64, m=4).
     """
-    if encode_impl == "expr":
-        cb, m, _k = _codebook_literal(codebooks)
-        v = _as_double(vec_col)
-        sub_dim = F.floor(F.size(v) / m).cast("int")
-
-        def code_for(j):
-            sv = F.slice(v, F.lit(j) * sub_dim + F.lit(1), sub_dim)
-            dists = F.transform(cb[j], lambda c: _sq_l2(sv, c))
-            return F.array_position(dists, F.array_min(dists)).cast("int")
-
-        return embeddings.select(
-            F.col(id_col),
-            F.array(*[code_for(j) for j in range(m)]).alias("codes"),
-        )
-
     import numpy as np
     from pyspark.sql import types as T
 

@@ -1,7 +1,10 @@
 """Embedding similarity search: brute-force cosine top-k + LSH scale path.
 
-All vector math stays JVM-side: arrays cast to double, dot products
-via ``aggregate(zip_with(...))`` — no Python in the hot path.
+Vector math is defined by JVM expressions: arrays cast to double, dot
+products via ``aggregate(zip_with(...))`` folds.  The exact scoring
+operators (cosine pairs, fixed-centroid assignment) run that fold as a
+bit-identical Arrow kernel — one production path each; their
+expression twins live in tests/reference_impls.py as equality pins.
 
 Brute-force is the correctness baseline (exact top-k). The scale path
 is random-hyperplane LSH: sign-bucket every vector once (linear), then
@@ -49,64 +52,30 @@ def cosine_pairs(
     id_left: str,
     id_right: str,
     vec_col: str = "embedding",
-    impl: str = "arrow_exact",
 ) -> DataFrame:
     """All-pairs cosine similarity (left x right) — exact, quadratic.
 
-    Use only with a bounded left side (the query set); either impl
-    makes one pass over ``right`` with the query panel held in memory.
-
-    ``impl='arrow_exact'`` (default since r12) scores each Arrow batch
-    of the corpus against the collected panel with the sequential
-    numpy kernel — BIT-IDENTICAL to the expression path by the
-    codec-kernel argument (`_assign_exact_arrow` docstring): dot and
-    norm accumulate dimension-sequentially (one rounding per step,
-    the same IEEE left fold), the denominator is the same
-    product-then-divide, and the panel's own norms are collected FROM
-    the expression plan, not recomputed.  The expression twin
-    (``impl='expr'``: broadcast join + interpreted HOF folds — the
-    per-pair fold never enters codegen) is kept as the equality
-    anchor, pinned in tests/test_similarity.py.
-    """
-    l = left.select(
-        F.col(id_left).alias("__qid"), _as_double(vec_col).alias("__qv")
-    ).withColumn("__qn", _norm(F.col("__qv")))
-    if impl == "arrow_exact":
-        return _cosine_pairs_arrow(l, right, id_left, id_right, vec_col)
-    r = right.select(
-        F.col(id_right).alias("__cid"), _as_double(vec_col).alias("__cv")
-    ).withColumn("__cn", _norm(F.col("__cv")))
-    return (
-        F.broadcast(l)
-        .join(r, F.col("__qid") != F.col("__cid"))
-        .select(
-            F.col("__qid").alias(id_left),
-            F.col("__cid").alias(id_right),
-            (_dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn"))).alias(
-                "cosine"
-            ),
-        )
-    )
-
-
-def _cosine_pairs_arrow(
-    l: DataFrame,
-    right: DataFrame,
-    id_left: str,
-    id_right: str,
-    vec_col: str,
-) -> DataFrame:
-    """Arrow twin of the cosine_pairs expression path: the bounded
-    panel ``l`` (``__qid``, ``__qv``, ``__qn`` — norms already computed
-    by the JVM expression) is collected once (the broadcast the
-    expression path paid), and each corpus batch is scored with
-    dimension-sequential accumulation.  Emits one row per (query,
-    candidate) pair with ``__qid != __cid``, exactly the join's row
-    set; downstream consumers group or rank, so pair order is free.
+    Use only with a bounded left side (the query set): the panel (its
+    norms computed by the JVM expression) is collected once, and each
+    Arrow batch of ``right`` is scored against it with a sequential
+    numpy kernel.  Emits one row per (query, candidate) pair with
+    different ids; downstream consumers group or rank, so pair order
+    is free.  The cosines are BIT-IDENTICAL to the broadcast-join
+    expression (``cosine_pairs_expr`` in tests/reference_impls.py,
+    pinned in tests/test_similarity.py) by the codec-kernel argument
+    (`_assign_exact_arrow` docstring): dot and norm accumulate
+    dimension-sequentially (one rounding per step, the same IEEE left
+    fold), the denominator is the same product-then-divide, and the
+    panel's own norms are collected FROM the expression plan, not
+    recomputed.  The expression's per-pair HOF fold never enters
+    codegen, which is why the kernel is the one path.
     """
     import numpy as np
     from pyspark.sql import types as T
 
+    l = left.select(
+        F.col(id_left).alias("__qid"), _as_double(vec_col).alias("__qv")
+    ).withColumn("__qn", _norm(F.col("__qv")))
     rows = l.collect()
     qids = [row["__qid"] for row in rows]
     Q = (
@@ -437,13 +406,12 @@ def brute_force_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow_exact",
 ) -> DataFrame:
-    """Exact cosine top-k per query vector.
+    """Exact cosine top-k per query vector (pairs scored by
+    :func:`cosine_pairs`).
 
     Output: (query_id, neighbor_id, rank, cosine). Deterministic
-    tiebreak on neighbor id.  ``impl`` selects the pair-scoring path
-    (see :func:`cosine_pairs`); both produce bit-identical cosines.
+    tiebreak on neighbor id.
     """
     pairs = cosine_pairs(
         queries.select(F.col(id_col).alias("query_id"), vec_col),
@@ -451,7 +419,6 @@ def brute_force_topk(
         "query_id",
         "neighbor_id",
         vec_col,
-        impl=impl,
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
@@ -725,7 +692,7 @@ def ivf_assignments(
         Argmax tie-break = first max = smallest list_id (centroid rows
         sorted), matching the expression path's ORDER BY cos DESC,
         list_id; last-ulp cosine drift vs the fold-sum is possible, so
-        the ORACLE-pinned queries keep assign_impl='expr'."""
+        the ORACLE-pinned queries use assign_impl='arrow_exact'."""
         import numpy as np
         import pandas as pd
         from pyspark.sql import types as T
@@ -1129,17 +1096,18 @@ def semantic_dedup(
     {'kept', 'semantic_dup'}.
 
     ``assign_impl=None`` (the default) sizes the assignment
-    implementation by the corpus — ``"expr"`` (interpreted
-    higher-order dot products, bit-replayable by the oracle) below
-    1e5 vectors, ``"arrow"`` (BLAS-batched, ~8x cheaper at 200k
-    vectors, equality-tested on tie-free data) at or above — the same
-    operator-side count-gate policy as ``simhash_pairs(band_chunks=
-    None)`` and ``n_lists=None``, so production callers inherit the
-    right default instead of mirroring a bench-side switch. The gate
-    costs one count() action on the raw input scan (metadata-near on
-    parquet); pass ``n_vectors`` to skip it when the cardinality is
-    already known, or pin ``assign_impl`` explicitly (oracle-pinned
-    callers pin ``"expr"``).
+    implementation by the corpus — ``"arrow_exact"`` (the sequential
+    Arrow kernel, bit-identical to the expression fold the oracle
+    replays) below 1e5 vectors, ``"arrow"`` (BLAS-batched, ~8x cheaper
+    at 200k vectors, equality-tested on tie-free data) at or above —
+    the same operator-side count-gate policy as
+    ``simhash_pairs(band_chunks=None)`` and ``n_lists=None``, so
+    production callers inherit the right default instead of mirroring
+    a bench-side switch. The gate costs one count() action on the raw
+    input scan (metadata-near on parquet); pass ``n_vectors`` to skip
+    it when the cardinality is already known, or pin ``assign_impl``
+    explicitly (oracle-pinned callers pin ``"arrow_exact"`` so the
+    gate can never pick BLAS).
     """
     if assign_impl is None:
         if n_vectors is None:
@@ -1197,12 +1165,12 @@ def save_ivf_index(
     vector, repartitioned on list_id so each inverted list is
     physically co-located — a probe's candidate join then shuffles
     only the query side). Defaults are the SCALE settings (sqrt-n
-    lists, one Lloyd refinement, parallel per-dimension means); pass
-    ``assign_impl="arrow"`` for corpora past ~1e5 vectors (BLAS-
-    batched assignment — assignment-equivalent on tie-free data, but
-    last-ulp cosine drift vs the expression path is possible; keep
-    ``assign_impl="expr"`` for oracle-pinned or replay-exact builds —
-    see ivf_assignments).
+    lists, one Lloyd refinement, parallel per-dimension means, and the
+    bit-exact ``assign_impl="arrow_exact"`` kernel, which oracle-pinned
+    and replay-exact builds need); pass ``assign_impl="arrow"`` for
+    corpora past ~1e5 vectors (BLAS-batched assignment —
+    assignment-equivalent on tie-free data, but last-ulp cosine drift
+    vs the exact fold is possible — see ivf_assignments).
 
     ``meta_cols`` persists vector METADATA (source / license / date)
     beside each assignment row, which is what makes filtered serving
@@ -1529,44 +1497,23 @@ def assign_to_centroids(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow_exact",
 ) -> DataFrame:
     """Assign vectors to FIXED centroids — the exact argmax-cosine /
     list_id tie-break the index build uses — returning rows in the
     assignments schema ``(id_col, list_id, __vec)``.
 
-    ``impl='arrow_exact'`` (default since r12) runs the bit-identical
-    Arrow kernel (:func:`_assign_exact_arrow` — dimension-sequential
-    folds, first-max tie-break); ``impl='expr'`` keeps the pure-
-    expression twin as the equality anchor.  O(batch * n_lists) scores
-    either way; the kernel collects the index-sized centroid set where
-    the expression path broadcast it.
+    Runs the bit-identical Arrow kernel (:func:`_assign_exact_arrow` —
+    dimension-sequential folds, first-max tie-break), O(batch *
+    n_lists) scores against the collected index-sized centroid set.
+    Its expression twin (broadcast centroid attach + argmax window) is
+    ``assign_to_centroids_expr`` in tests/reference_impls.py, pinned
+    in tests/test_ivf.py.
     """
     vecs = vectors.select(
         F.col(id_col).alias("__id"), _as_double(vec_col).alias("__v")
     )
-    if impl == "arrow_exact":
-        out = _assign_exact_arrow(
-            centroids, vecs, "__id", "__v", "__id", "__vec"
-        )
-        return out.select(
-            F.col("__id").alias(id_col), "list_id", "__vec"
-        )
-    vecs = vecs.withColumn("__n", _norm(F.col("__v")))
-    scored = vecs.join(F.broadcast(centroids)).select(
-        "__id",
-        "__v",
-        "list_id",
-        (
-            _dot(F.col("__v"), F.col("centroid")) / (F.col("__n") * F.col("__cn"))
-        ).alias("__cos"),
-    )
-    w = Window.partitionBy("__id").orderBy(F.col("__cos").desc(), "list_id")
-    return (
-        scored.withColumn("__r", F.row_number().over(w))
-        .filter("__r = 1")
-        .select(F.col("__id").alias(id_col), "list_id", F.col("__v").alias("__vec"))
-    )
+    out = _assign_exact_arrow(centroids, vecs, "__id", "__v", "__id", "__vec")
+    return out.select(F.col("__id").alias(id_col), "list_id", "__vec")
 
 
 def ivf_append(

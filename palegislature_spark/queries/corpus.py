@@ -836,11 +836,9 @@ def bpe_encode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             " ",
         ).alias("text"),
     )
-    # encode_impl='arrow' (operator default): the shuffle-free
-    # mapInPandas kernel with the per-task word memo — no dictionary
-    # join exists on this path, so the former count-gated
-    # broadcast_vocab decision (and its per-rep count() job) is moot;
-    # the expr twin keeps that gate for callers that need it
+    # apply_bpe is the shuffle-free mapInPandas kernel with the
+    # per-task word memo — no dictionary join, so no broadcast
+    # decision (or its per-rep count() job) is needed
     enc = apply_bpe(cleaned, merges, "doc_id", "text")
     # space-joined (not raw array<string>): top-level result columns
     # must be scalar so downstream canonicalizers can sort/hash them —

@@ -1213,9 +1213,10 @@ def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     # assign_impl pinned: this is the ORACLE tier — the auto gate
     # would switch to the arrow/BLAS assignment at replica scale,
-    # whose last-ulp cosine drift the DuckDB replay can't follow
+    # whose last-ulp cosine drift the DuckDB replay can't follow;
+    # arrow_exact is bit-identical to the replayed expression fold
     out = similarity.semantic_dedup(
-        emb, threshold=0.4, n_lists=8, assign_impl="expr"
+        emb, threshold=0.4, n_lists=8, assign_impl="arrow_exact"
     )
     return out.select(
         "vec_id", F.col("list_id").cast("long").alias("list_id"), "status"
@@ -1322,9 +1323,7 @@ def audit_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     prev = emb.filter(F.col("vec_id") % 4 != 0)
     cur = emb.filter((F.col("vec_id") % 4 == 0) & (F.col("label") <= 4))
-    rep = audit.embedding_drift(
-        prev, cur, n_lists=8, threshold_milli=100, assign_impl="expr"
-    )
+    rep = audit.embedding_drift(prev, cur, n_lists=8, threshold_milli=100)
     return rep.select(
         F.col("list_id").cast("long").alias("list_id"),
         "n_prev",

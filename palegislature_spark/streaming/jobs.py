@@ -488,105 +488,6 @@ def run_available_now(
     )
 
 
-def value_transitions_tws(
-    stream: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    watermark: str = "2 hours",
-    state_ttl_ms: int = 2 * 3600 * 1000,
-) -> DataFrame:
-    """:func:`value_transitions` on the MODERN stateful API —
-    ``transformWithStateInPandas`` (Spark 4), the successor to
-    ``applyInPandasWithState``: typed state handles (ValueState /
-    ListState / MapState per key, each with its own TTL), timers, and
-    schema evolution of state. Semantics here are identical to the
-    legacy twin (asserted in tests/test_streaming.py); the state is
-    one ValueState holding (last value, last event ms) with a TTL so
-    idle keys evict — bounded by the active-key set.
-
-    Both implementations are kept: applyInPandasWithState is the
-    widely-deployed surface, transformWithState is where new stateful
-    features land. Environment seam (the Pillow/wave pattern): the
-    transformWithState state-server protocol needs ``protobuf`` on the
-    workers — standard on real deployments, absent in this container,
-    so its parity test is skipif-gated while the legacy twin carries
-    the driver-checked CORRECTNESS row.
-    """
-    from pyspark.sql.streaming import StatefulProcessor
-
-    value_type = stream.schema[value_col].dataType
-    out_schema = T.StructType(
-        [
-            stream.schema[key_col],
-            stream.schema[ts_col],
-            stream.schema[value_col],
-            T.StructField(f"prev_{value_col}", value_type),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("last_value", value_type),
-            T.StructField("last_ms", T.LongType()),
-        ]
-    )
-
-    class _Transitions(StatefulProcessor):
-        def init(self, handle):
-            self._state = handle.getValueState(
-                "last", state_schema, ttlDurationMs=state_ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            if self._state.exists():
-                last_value, last_ms = self._state.get()
-            else:
-                last_value, last_ms = None, -1
-
-            batch = pd.concat(list(rows), ignore_index=True).sort_values(
-                ts_col, kind="stable"
-            )
-            out_keys, out_ts, out_vals, out_prev = [], [], [], []
-            for ts, value in zip(batch[ts_col], batch[value_col]):
-                ms = int(ts.value // 1_000_000)
-                if ms <= last_ms:
-                    continue  # watermark-late relative to state
-                if last_ms < 0 or value != last_value:
-                    out_keys.append(key[0])
-                    out_ts.append(ts)
-                    out_vals.append(value)
-                    out_prev.append(last_value)
-                last_value, last_ms = value, ms
-
-            self._state.update((last_value, last_ms))
-            if out_keys:
-                yield pd.DataFrame(
-                    {
-                        key_col: out_keys,
-                        ts_col: out_ts,
-                        value_col: out_vals,
-                        f"prev_{value_col}": out_prev,
-                    }
-                )
-
-        def close(self):
-            pass
-
-    return (
-        stream.select(key_col, ts_col, value_col)
-        .withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .transformWithStateInPandas(
-            statefulProcessor=_Transitions(),
-            outputStructType=out_schema,
-            outputMode="append",
-            timeMode="EventTime",
-        )
-    )
-
-
 def _recover_interrupted_swap(fs, HPath, base: str) -> None:
     """Recover an interrupted staging-promote swap: if live is
     missing, staging (if it committed - _SUCCESS present) holds the

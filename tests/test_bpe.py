@@ -9,6 +9,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from palegislature_spark.operators.bpe import apply_bpe, bpe_merge_table
+from tests.reference_impls import apply_bpe_expr
 
 
 def _reference_bpe(texts: list[str], n_merges: int):
@@ -92,21 +93,22 @@ def test_apply_bpe_tokenizes_with_learned_merges(spark):
 
 
 def test_apply_bpe_broadcast_paths_agree(spark):
-    """The dictionary join must produce identical tokens whether the
-    word->tokens table is broadcast (small-corpus gate) or left to the
-    optimizer (the replica-scale fallback — a forced broadcast of the
-    corpus-grown vocabulary overflowed at 500k docs)."""
+    """The expression twin's dictionary join must produce identical
+    tokens whether the word->tokens table is broadcast (small-corpus
+    gate) or left to the optimizer (the replica-scale fallback — a
+    forced broadcast of the corpus-grown vocabulary overflowed at 500k
+    docs)."""
     docs = spark.createDataFrame(
         list(enumerate(TEXTS)), "doc_id long, text string"
     )
     mt = bpe_merge_table(docs, n_merges=10)
     bcast = {
         r["doc_id"]: r["tokens"]
-        for r in apply_bpe(docs, mt, broadcast_vocab=True).collect()
+        for r in apply_bpe_expr(docs, mt, broadcast_vocab=True).collect()
     }
     plain = {
         r["doc_id"]: r["tokens"]
-        for r in apply_bpe(docs, mt, broadcast_vocab=False).collect()
+        for r in apply_bpe_expr(docs, mt, broadcast_vocab=False).collect()
     }
     assert bcast == plain
 
@@ -181,8 +183,8 @@ def test_batched_property_equals_sequential(spark, word_lists):
 
 
 def test_apply_bpe_arrow_equals_expr(spark):
-    """The shuffle-free mapInPandas encode (encode_impl='arrow', the
-    default) must be bit-equal to the expression twin on every path:
+    """The shuffle-free mapInPandas encode must be bit-equal to the
+    expression twin (tests/reference_impls.py) on every path:
     the wrapped replace chain, the \\x01/\\x02 fold fallback, empty/
     NULL/multi-space documents, and non-BMP unicode."""
     rows = [
@@ -200,10 +202,10 @@ def test_apply_bpe_arrow_equals_expr(spark):
     )
     arrow = {
         r["doc_id"]: r["tokens"]
-        for r in apply_bpe(docs, mt, encode_impl="arrow").collect()
+        for r in apply_bpe(docs, mt).collect()
     }
     expr = {
         r["doc_id"]: r["tokens"]
-        for r in apply_bpe(docs, mt, encode_impl="expr").collect()
+        for r in apply_bpe_expr(docs, mt).collect()
     }
     assert arrow == expr

@@ -12,6 +12,7 @@ from hypothesis import strategies as st
 
 from palegislature_spark.operators import dedup
 from tests.conftest import rows
+from tests.reference_impls import simhash_signatures_expr, winnow_fingerprints_expr
 
 DOCS = [
     (1, "the quick brown fox jumps over the lazy dog"),
@@ -165,25 +166,25 @@ def test_winnow_impls_agree(spark):
             (1, "the quick brown fox jumps over the lazy dog again and again"),
             (2, "the quick brown fox jumps over the lazy cat again and again"),
             (3, "völlig unrelated ünïcode text here to pin codepoint parity"),
-            (4, "shrt"),  # below k: no fingerprints from either impl
+            (4, "shrt"),  # below k: no fingerprints from either path
         ],
         "doc_id long, text string",
     )
-    a = set(map(tuple, dedup.winnow_fingerprints(docs, "doc_id", "text", impl="expr").collect()))
-    b = set(map(tuple, dedup.winnow_fingerprints(docs, "doc_id", "text", impl="arrow").collect()))
+    a = set(map(tuple, winnow_fingerprints_expr(docs, "doc_id", "text").collect()))
+    b = set(map(tuple, dedup.winnow_fingerprints(docs, "doc_id", "text").collect()))
     assert a == b and len(a) > 0
     assert not any(i == 4 for i, _ in a)
 
 
 def test_winnow_arrow_null_text_dropped(spark):
-    # NULL text must be DROPPED (the expr impl's length-filter
+    # NULL text must be DROPPED (the expression twin's length-filter
     # semantics), not crash the Arrow loop (ADVICE r4)
     docs = spark.createDataFrame(
         [(1, "a normal document body here"), (2, None), (3, "")],
         "doc_id long, text string",
     )
-    a = set(map(tuple, dedup.winnow_fingerprints(docs, "doc_id", "text", impl="expr").collect()))
-    b = set(map(tuple, dedup.winnow_fingerprints(docs, "doc_id", "text", impl="arrow").collect()))
+    a = set(map(tuple, winnow_fingerprints_expr(docs, "doc_id", "text").collect()))
+    b = set(map(tuple, dedup.winnow_fingerprints(docs, "doc_id", "text").collect()))
     assert a == b
     assert {i for i, _ in b} == {1}
 
@@ -208,14 +209,14 @@ _WINNOW_ALPHABET = (
 @settings(max_examples=12, deadline=None, derandomize=True)
 def test_winnow_impls_bit_identical_property(spark, texts):
     """Hypothesis corpus over the adversarial alphabet, lengths
-    0..k+w+4 straddling both drop thresholds: the Arrow impl (driver
-    default) must produce BIT-IDENTICAL fingerprints to the
-    expression twin on every document."""
+    0..k+w+4 straddling both drop thresholds: the Arrow kernel must
+    produce BIT-IDENTICAL fingerprints to the expression twin
+    (tests/reference_impls.py) on every document."""
     k, w = 5, 4
     docs = list(enumerate(texts))
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    a = sorted(map(tuple, dedup.winnow_fingerprints(df, "doc_id", "text", k=k, w=w, impl="expr").collect()))
-    b = sorted(map(tuple, dedup.winnow_fingerprints(df, "doc_id", "text", k=k, w=w, impl="arrow").collect()))
+    a = sorted(map(tuple, winnow_fingerprints_expr(df, "doc_id", "text", k=k, w=w).collect()))
+    b = sorted(map(tuple, dedup.winnow_fingerprints(df, "doc_id", "text", k=k, w=w).collect()))
     assert a == b
     # drop semantics: every doc shorter than k contributes nothing
     short = {i for i, t in docs if len(t) < k}
@@ -443,8 +444,8 @@ def test_minhash_max_bucket_drops_identical_flood(spark):
 
 
 def test_simhash_arrow_equals_expr(spark):
-    """The shuffle-free mapInPandas SimHash (impl='arrow', the default)
-    must be bit-equal to the expression twin: the computation is pure
+    """The shuffle-free mapInPandas SimHash must be bit-equal to the
+    expression twin (tests/reference_impls.py): the computation is pure
     integer (md5 nibbles, shifts, occurrence counts), so there is no
     rounding to diverge — including empty-string tokens from repeated
     spaces, unicode, and NULL text (dropped on both paths)."""
@@ -459,51 +460,12 @@ def test_simhash_arrow_equals_expr(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     arrow = {
         r["doc_id"]: r["simhash"]
-        for r in dedup.simhash_signatures(
-            df, "doc_id", "text", impl="arrow"
-        ).collect()
+        for r in dedup.simhash_signatures(df, "doc_id", "text").collect()
     }
     expr = {
         r["doc_id"]: r["simhash"]
-        for r in dedup.simhash_signatures(
-            df, "doc_id", "text", impl="expr"
-        ).collect()
+        for r in simhash_signatures_expr(df, "doc_id", "text").collect()
     }
     assert arrow == expr
     assert 3 not in arrow  # NULL text drops on both paths
 
-
-def test_minhash_band_keys_arrow_equals_expr(spark):
-    """The vectorized band-key kernel (impl='arrow', the default) must
-    be bit-equal to the expression construction: the numpy XXH64
-    long/int twins reproduce Spark's xxhash64 exactly (including the
-    SIGNED min over the hash family), so signatures and band keys
-    carry identical bits."""
-    from pyspark.sql import functions as F
-
-    texts = [
-        "the quick brown fox jumps over the lazy dog and runs away",
-        "the quick brown fox jumps over the lazy cat and runs away",
-        "completely different words here to make another shingle set",
-        "a b c",
-        "x y z w v u t s r q p o n m l k",
-    ]
-    df = spark.createDataFrame(
-        list(enumerate(texts)), "doc_id long, text string"
-    )
-    sharr = dedup.shingle_arrays(df, "doc_id", "text", 3).select(
-        "doc_id", F.transform("sh", lambda s: F.xxhash64(s)).alias("sha")
-    )
-    arrow = {
-        (r["doc_id"], r["band"]): r["band_key"]
-        for r in dedup.minhash_band_keys(
-            sharr, "doc_id", 32, 16, impl="arrow"
-        ).collect()
-    }
-    expr = {
-        (r["doc_id"], r["band"]): r["band_key"]
-        for r in dedup.minhash_band_keys(
-            sharr, "doc_id", 32, 16, impl="expr"
-        ).collect()
-    }
-    assert arrow == expr and len(arrow) == 5 * 16

@@ -92,56 +92,3 @@ def test_pagerank_random_graphs_match_reference(spark, edges):
     }
     assert got == _py_pagerank(edges)
 
-
-def test_fold_arrow_matches_expression_twin(spark):
-    """The r12 Arrow fold kernel vs the interpreted-HOF expression twin
-    on a dense random graph (hundreds of nodes, in-degrees from 1 to
-    ~100): every rank double must be BIT-identical, including with an
-    Arrow batch size small enough that groups span batches (the
-    carry-across-batches path)."""
-    import random
-
-    rng = random.Random(12)
-    edges = [
-        (f"n{rng.randrange(300)}", f"n{rng.randrange(40)}")
-        for _ in range(3000)
-    ]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    expr = {
-        r.node: r.rank
-        for r in pagerank(
-            df, iters=3, exact_replay=True, fold_impl="expr"
-        ).collect()
-    }
-    arrow = {
-        r.node: r.rank
-        for r in pagerank(
-            df, iters=3, exact_replay=True, fold_impl="arrow"
-        ).collect()
-    }
-    assert arrow == expr  # bit-exact, not approx
-
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key)
-    try:
-        # 7-row batches: short-segment depth loop + carry on every batch
-        spark.conf.set(key, "7")
-        tiny = {
-            r.node: r.rank
-            for r in pagerank(
-                df, iters=3, exact_replay=True, fold_impl="arrow"
-            ).collect()
-        }
-        # 32-row batches with ~75-row groups: the per-segment cumsum
-        # branch (n_seg * 8 <= rows) INCLUDING its carry-seed prepend
-        spark.conf.set(key, "32")
-        mid = {
-            r.node: r.rank
-            for r in pagerank(
-                df, iters=3, exact_replay=True, fold_impl="arrow"
-            ).collect()
-        }
-    finally:
-        spark.conf.set(key, old)
-    assert tiny == expr
-    assert mid == expr

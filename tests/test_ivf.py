@@ -7,6 +7,7 @@ import math
 import pytest
 
 from palegislature_spark.operators import similarity
+from tests.reference_impls import assign_to_centroids_expr
 from pyspark.sql import types as T
 
 SCHEMA = T.StructType(
@@ -563,13 +564,14 @@ def test_arrow_exact_assign_bit_identical_to_expression(skewed):
 
 def test_assign_to_centroids_arrow_exact_bit_identical(skewed):
     """assign_to_centroids (frozen-centroid batch path: ivf_append /
-    drift audits / streaming ingest) — kernel vs expression twin."""
+    drift audits / streaming ingest) — kernel vs expression twin
+    (tests/reference_impls.py)."""
     cents, _ = similarity.ivf_assignments(skewed, n_lists=4, refine_iters=1)
     batch = skewed.filter("vec_id % 3 = 0")
-    e = sorted(map(tuple, similarity.assign_to_centroids(
-        batch, cents, impl="expr"
+    e = sorted(map(tuple, assign_to_centroids_expr(
+        batch, cents
     ).select("vec_id", "list_id").collect()))
     k = sorted(map(tuple, similarity.assign_to_centroids(
-        batch, cents, impl="arrow_exact"
+        batch, cents
     ).select("vec_id", "list_id").collect()))
     assert e == k

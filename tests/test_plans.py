@@ -85,6 +85,14 @@ def test_embedding_near_dup_no_cartesian(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_cluster_semantic_dedup_has_no_nested_loop_join(spark, sf_dir):
+    # SemDeDup's centroid assignment is the arrow_exact kernel: the
+    # interpreted assignment's conditionless vectors x centroids
+    # attach (a BroadcastNestedLoopJoin) must not come back
+    plan = plan_of(spark, sf_dir, "cluster_semantic_dedup")
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
 def test_vocab_topk_is_distributed_topk(spark, sf_dir):
     # the vocabulary rank must be TakeOrderedAndProject (distributed
     # per-partition heaps), never a single-partition Sort of the whole

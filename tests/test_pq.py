@@ -15,6 +15,7 @@ from pyspark.sql.window import Window
 
 from palegislature_spark.catalog import load
 from palegislature_spark.operators import pq
+from tests.reference_impls import pq_encode_expr
 
 M, K = 4, 16
 
@@ -332,14 +333,14 @@ def test_filtered_recall_registry_shape(spark):
 
 
 def test_pq_encode_arrow_bit_identical_to_expression(spark, sf_dir):
-    """encode_impl='arrow' (the r12 default) must produce BIT-identical
-    codes to the pure-expression twin: the kernel accumulates each
+    """pq_encode's Arrow kernel must produce BIT-identical codes to the
+    pure-expression twin (tests/reference_impls.py): the kernel accumulates each
     squared-L2 dimension-sequentially (the same IEEE left fold _sq_l2
     computes) and np.argmin ties to the first minimum = smallest
     code_id, matching array_position(array_min)."""
     emb, cbs, _ = _cbs_codes(spark, sf_dir)
     e = {r["vec_id"]: list(r["codes"])
-         for r in pq.pq_encode(emb, cbs, encode_impl="expr").collect()}
+         for r in pq_encode_expr(emb, cbs).collect()}
     a = {r["vec_id"]: list(r["codes"])
-         for r in pq.pq_encode(emb, cbs, encode_impl="arrow").collect()}
+         for r in pq.pq_encode(emb, cbs).collect()}
     assert e == a

@@ -8,6 +8,7 @@ import pytest
 
 from palegislature_spark.operators import similarity
 from tests.conftest import rows
+from tests.reference_impls import cosine_pairs_expr
 
 # 4-dim unit-ish vectors with known geometry.
 VECS = [
@@ -350,7 +351,8 @@ def test_max_cosine_vs_eval_guards(spark):
 
 def test_cosine_pairs_arrow_matches_expression_twin(spark):
     """The r12 Arrow pair-scoring kernel vs the broadcast-join +
-    interpreted-HOF expression twin: every cosine must be BIT-identical
+    interpreted-HOF expression twin (tests/reference_impls.py): every
+    cosine must be BIT-identical
     over a random float corpus (wide magnitudes) — the full pair set,
     not just the top-k.  (Zero-norm vectors are out of contract: under
     ANSI mode the EXPRESSION path itself raises DIVIDE_BY_ZERO on
@@ -374,22 +376,22 @@ def test_cosine_pairs_arrow_matches_expression_twin(spark):
     emb = spark.createDataFrame(rows, schema)
     qs = emb.filter(F.col("vec_id") < 7)
 
-    def pairs(impl):
-        return similarity.cosine_pairs(
+    def pairs(cosine_pairs):
+        return cosine_pairs(
             qs.select(F.col("vec_id").alias("query_id"), "embedding"),
             emb.select(F.col("vec_id").alias("neighbor_id"), "embedding"),
             "query_id",
             "neighbor_id",
             "embedding",
-            impl=impl,
         )
 
     expr = {
-        (r.query_id, r.neighbor_id): r.cosine for r in pairs("expr").collect()
+        (r.query_id, r.neighbor_id): r.cosine
+        for r in pairs(cosine_pairs_expr).collect()
     }
     arrow = {
         (r.query_id, r.neighbor_id): r.cosine
-        for r in pairs("arrow_exact").collect()
+        for r in pairs(similarity.cosine_pairs).collect()
     }
     assert expr.keys() == arrow.keys()
     assert expr == arrow  # bit-exact, not approx

@@ -55,9 +55,6 @@ ALLOW_NESTED_LOOP = {
     # n_probe setting plus the bounded-panel brute-force exact leg —
     # every NLJ is an already-allowlisted shape, just unioned
     "ann_probe_sweep",
-    # Same IVF centroid attach (vectors x broadcast 8-row centroid
-    # set); the within-cluster pair scan itself is a list_id equi-join.
-    "cluster_semantic_dedup",
     # The only NLJ left after the keyed-branch rewrite of the member
     # match (er/member_ingest.py) is the new-member id allocator's
     # crossJoin(broadcast(max(id))) — a 1-row scalar attach, the
@@ -90,9 +87,6 @@ ALLOW_NESTED_LOOP = {
     # the vector leg's bounded-query-panel non-equi broadcast (the
     # knn_bruteforce shape); fusion itself is k-row outer joins (r10)
     "ann_hybrid_rrf",
-    # frozen-centroid attach on BOTH generations (assign_to_centroids
-    # twice); everything downstream is list_id-keyed aggregation (r10)
-    "audit_embedding_drift",
     # IVFPQ: probe_lists' conditionless query x broadcast centroid
     # attach (index-sized, the knn_ivf shape) — the candidate join is
     # a list_id equi-join and ADC is a (sub_id, code_id) equi-join
