@@ -470,7 +470,6 @@ def embedding_drift(
     vec_col: str = "embedding",
     n_lists: int | None = 8,
     threshold_milli: int = 100,
-    assign_impl: str = "arrow_exact",
     n_vectors: int | None = None,
 ) -> DataFrame:
     """EMBEDDING distribution-shift report — the third leg of the
@@ -514,16 +513,16 @@ def embedding_drift(
     drifted, matching the other gates' zero-total rule.
 
     Scale shape: one centroid broadcast + linear assignment pass per
-    generation (O(n * n_lists) scores — ``assign_impl='arrow'`` for
-    corpora past ~1e5 vectors, same gate as semantic_dedup), one
-    map-side-combined count each, then everything downstream runs on
-    the n_lists-sized mass table.
+    generation (O(n * n_lists) scores, both generations through the
+    bit-exact ``arrow_exact`` kernel so their masses are binned by one
+    arithmetic), one map-side-combined count each, then everything
+    downstream runs on the n_lists-sized mass table. ``n_vectors``
+    skips the sizing count when ``n_lists`` is None (sqrt-n lists).
     """
     from palegislature_spark.operators.similarity import ivf_assignments
 
     centroids, prev_assigned = ivf_assignments(
-        prev, id_col, vec_col, n_lists, refine_iters=0,
-        assign_impl=assign_impl, n_vectors=n_vectors,
+        prev, id_col, vec_col, n_lists, refine_iters=0, n_vectors=n_vectors,
     )
     prev_counts = prev_assigned.groupBy("list_id").agg(
         F.count(F.lit(1)).cast("long").alias("n")

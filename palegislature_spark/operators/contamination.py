@@ -216,9 +216,9 @@ def decontaminate(
     # string (guide §2.3: the broadcast/exchange and the hash-table
     # probe move 8 bytes per gram; collisions at ~2^-64 per gram pair
     # are quantitatively irrelevant — the hashed_shingles argument).
-    # explode_outer's NULL gram (doc shorter than n words) hashes to
-    # the xxhash64 seed constant, which matches no eval gram, exactly
-    # as NULL matched no string key.
+    # explode_outer's NULL gram (doc shorter than n words) keeps a NULL
+    # hash: xxhash64(NULL) is the seed constant 42, which an eval gram
+    # hashing to 42 would match, flagging every short document.
     exploded = (
         train.select(F.col(id_col), F.split(F.col(text_col), " ").alias("tk"))
         .select(id_col, grams_arr.alias("grams"))
@@ -228,7 +228,9 @@ def decontaminate(
             F.explode_outer("grams").alias("gram"),
         )
         .select(
-            id_col, "n_grams", F.xxhash64("gram").alias("gh")
+            id_col,
+            "n_grams",
+            F.when(F.col("gram").isNotNull(), F.xxhash64("gram")).alias("gh"),
         )
     )
     eval_grams = (

@@ -33,6 +33,16 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from palegislature_spark.sources.commit import (
+    MINHASH_DELTAS,
+    commit_generation,
+    current_generation,
+    generation_dir,
+    hadoop_fs,
+    names,
+    stamp_folded,
+)
+
 
 # --------------------------------------------------------------------------
 # Exact dedup (hash-groupBy)
@@ -779,57 +789,6 @@ def minhash_index(
 # Persisted MinHash index lifecycle: save -> append xN -> compact
 # --------------------------------------------------------------------------
 
-_BAND_GEN_MARKER = "_BANDGEN-"
-
-
-def _band_gen_current(spark, base: str) -> int | None:
-    """Highest committed generation number, or None (no index)."""
-    from palegislature_spark.sources.merge import _hadoop_fs
-
-    fs, HPath = _hadoop_fs(spark, base)
-    if not fs.exists(HPath(base)):
-        return None
-    gens = []
-    for st in fs.listStatus(HPath(base)):
-        name = st.getPath().getName()
-        if name.startswith(_BAND_GEN_MARKER):
-            try:
-                gens.append(int(name[len(_BAND_GEN_MARKER):]))
-            except ValueError:
-                continue
-    return max(gens) if gens else None
-
-
-def _band_gen_commit(spark, base: str, gen: int) -> None:
-    """Atomically publish generation ``gen``: write the marker to a tmp
-    name, then rename to the fresh ``_BANDGEN-<gen>`` — rename to a
-    non-existent destination is atomic on HDFS/local (the
-    sources/merge.py manifest protocol, minimal form). Generations
-    older than the PREVIOUS one are pruned after the commit — the
-    one-generation retention window that lets a reader mid-scan on
-    N-1 survive the commit of N."""
-    from palegislature_spark.sources.merge import _hadoop_fs
-
-    fs, HPath = _hadoop_fs(spark, base)
-    tmp = HPath(f"{base}/{_BAND_GEN_MARKER[:-1]}.tmp")
-    out = fs.create(tmp, True)
-    out.close()
-    fs.rename(tmp, HPath(f"{base}/{_BAND_GEN_MARKER}{gen:06d}"))
-    for st in fs.listStatus(HPath(base)):
-        name = st.getPath().getName()
-        old = None
-        if name.startswith(_BAND_GEN_MARKER):
-            old = name[len(_BAND_GEN_MARKER):]
-        elif name.startswith("gen-"):
-            old = name[4:]
-        if old is not None:
-            try:
-                g = int(old)
-            except ValueError:
-                continue
-            if g < gen - 1:
-                fs.delete(st.getPath(), True)
-
 
 def save_minhash_index(index: DataFrame, path: str) -> None:
     """Persist a :func:`minhash_index` result as generation 0 of a
@@ -837,51 +796,22 @@ def save_minhash_index(index: DataFrame, path: str) -> None:
     atomically-committed generation marker. Layout contract: readers
     (:func:`load_minhash_index`) resolve the highest committed marker,
     so a generation directory becomes visible only once fully written
-    — a crashed save/compact leaves the previous generation live."""
+    — a crashed save/compact leaves the previous generation live
+    (sources/commit.py)."""
     spark = index.sparkSession
     base = path.rstrip("/")
     index.repartition("band").write.mode("overwrite").parquet(
-        f"{base}/gen-000000"
+        generation_dir(base, 0)
     )
-    _band_gen_commit(spark, base, 0)
+    fs, HPath = hadoop_fs(spark, base)
+    commit_generation(fs, HPath, base, 0)
 
 
-_DELTA_MARKER = "_BANDDELTA-"
-
-
-def _folded_high_water(fs, HPath, gen_dir: str) -> int:
-    """Highest delta batch id folded into ``gen_dir`` (the
-    ``_FOLDED-<id>`` file written by :func:`compact_minhash_index`
-    before the generation commits, so it becomes visible atomically
-    WITH the generation), or -1. Readers ignore committed deltas at or
-    below this mark — which is what makes the compact's
-    delete-after-commit of folded deltas pure garbage collection: a
-    crash between commit and deletion leaves stale deltas that are
-    already invisible."""
-    if not fs.exists(HPath(gen_dir)):
-        return -1
-    best = -1
-    for st in fs.listStatus(HPath(gen_dir)):
-        name = st.getPath().getName()
-        if name.startswith("_FOLDED-"):
-            try:
-                best = max(best, int(name[len("_FOLDED-"):]))
-            except ValueError:
-                continue
-    return best
-
-
-def _committed_delta_ids(fs, HPath, base: str) -> list[int]:
-    """Batch ids with a committed ``_BANDDELTA-<id>`` marker."""
-    ids = []
-    for st in fs.listStatus(HPath(base)):
-        name = st.getPath().getName()
-        if name.startswith(_DELTA_MARKER):
-            try:
-                ids.append(int(name[len(_DELTA_MARKER):]))
-            except ValueError:
-                continue
-    return ids
+def _current_generation_dir(fs, HPath, base: str) -> str:
+    gen = current_generation(fs, HPath, base)
+    if gen is None:
+        raise ValueError(f"no committed MinHash index at {base}")
+    return generation_dir(base, gen)
 
 
 def append_minhash_index_delta(
@@ -895,11 +825,11 @@ def append_minhash_index_delta(
     num_hashes: int = 32,
     bands: int = 16,
 ) -> bool:
-    """Streaming-grade append: index a micro-batch as its OWN
+    """Index a NEW document batch without touching historical rows:
+    one signature pass over the batch, written as its OWN
     ``delta-<batch_id>`` directory published by an atomic marker —
-    the crash-safe twin of :func:`append_minhash_index` (which
-    appends part-files into the live generation directly and so
-    relies on a single well-behaved batch writer).
+    O(batch) per batch. Ids are append-only (the caller dedups
+    re-derived ids via the merge layer first).
 
     Idempotence under foreachBatch's at-least-once contract: a replay
     whose ``batch_id`` already has a committed marker — or is already
@@ -907,30 +837,18 @@ def append_minhash_index_delta(
     a no-op, so replays never double-index a window.  A crash between
     the delta write and the marker rename leaves an UNCOMMITTED
     directory that readers ignore and the replay overwrites.  Returns
-    True iff the batch was newly committed.  O(batch) work per batch;
+    True iff the batch was newly committed.
     :func:`compact_minhash_index` folds accumulated deltas back into
     one band-clustered generation."""
-    from palegislature_spark.sources.merge import _hadoop_fs
-
     base = path.rstrip("/")
-    gen = _band_gen_current(spark, base)
-    if gen is None:
-        raise ValueError(f"no committed MinHash index at {base}")
-    fs, HPath = _hadoop_fs(spark, base)
-    marker = HPath(f"{base}/{_DELTA_MARKER}{batch_id:06d}")
-    if fs.exists(marker):
-        return False
-    if batch_id <= _folded_high_water(fs, HPath, f"{base}/gen-{gen:06d}"):
-        return False
-    keys = minhash_index(new_docs, id_col, text_col, n, num_hashes, bands)
-    keys.repartition("band").write.mode("overwrite").parquet(
-        f"{base}/delta-{batch_id:06d}"
-    )
-    tmp = HPath(f"{base}/{_DELTA_MARKER[:-1]}.tmp")
-    out = fs.create(tmp, True)
-    out.close()
-    fs.rename(tmp, marker)
-    return True
+    fs, HPath = hadoop_fs(spark, base)
+    gen_dir = _current_generation_dir(fs, HPath, base)
+
+    def write(delta: str) -> None:
+        keys = minhash_index(new_docs, id_col, text_col, n, num_hashes, bands)
+        keys.repartition("band").write.mode("overwrite").parquet(delta)
+
+    return MINHASH_DELTAS.append(fs, HPath, base, gen_dir, batch_id, write)
 
 
 def load_minhash_index(spark, path: str) -> DataFrame:
@@ -939,99 +857,45 @@ def load_minhash_index(spark, path: str) -> DataFrame:
     UNIONed with every committed streaming delta the generation has
     not yet folded (``_FOLDED`` high-water; uncommitted delta
     directories are invisible by construction)."""
-    from palegislature_spark.sources.merge import _hadoop_fs
-
     base = path.rstrip("/")
-    gen = _band_gen_current(spark, base)
-    if gen is None:
-        raise ValueError(f"no committed MinHash index at {base}")
-    gen_dir = f"{base}/gen-{gen:06d}"
-    fs, HPath = _hadoop_fs(spark, base)
-    fw = _folded_high_water(fs, HPath, gen_dir)
-    paths = [gen_dir] + [
-        f"{base}/delta-{d:06d}"
-        for d in sorted(_committed_delta_ids(fs, HPath, base))
-        if d > fw
-    ]
-    return spark.read.parquet(*paths)
-
-
-def append_minhash_index(
-    spark,
-    path: str,
-    new_docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 16,
-) -> None:
-    """Index a NEW document batch into the current generation without
-    touching historical rows: one signature pass over the batch, one
-    parquet append — O(batch) per batch, the ivf_append pattern on the
-    band-key index. Ids are append-only (the caller dedups re-derived
-    ids via the merge layer first). Repeated appends accumulate
-    per-batch files; :func:`compact_minhash_index` is the maintenance
-    pass that folds them back into one band-clustered dataset.
-    Single-writer convention, like every file-format table here
-    without a locking catalog."""
-    base = path.rstrip("/")
-    gen = _band_gen_current(spark, base)
-    if gen is None:
-        raise ValueError(f"no committed MinHash index at {base}")
-    keys = minhash_index(new_docs, id_col, text_col, n, num_hashes, bands)
-    keys.repartition("band").write.mode("append").parquet(
-        f"{base}/gen-{gen:06d}"
+    fs, HPath = hadoop_fs(spark, base)
+    gen_dir = _current_generation_dir(fs, HPath, base)
+    return spark.read.parquet(
+        *MINHASH_DELTAS.read_paths(fs, HPath, base, gen_dir)
     )
 
 
 def compact_minhash_index(spark, path: str) -> dict:
-    """Fold the accumulated per-batch band files into ONE
-    band-clustered dataset (VERDICT r9 #5): read the current
-    generation PLUS every committed-but-unfolded streaming delta
-    (:func:`append_minhash_index_delta`), repartition on ``band`` and
-    sort each partition by
-    (band, band_key) — so row-group min/max stats prune candidate
-    lookups and the file count drops from O(appended batches x
-    partitions) back to O(bands) — then publish as generation N+1 via
-    the atomic marker commit (:func:`_band_gen_commit`; crash before
-    the commit leaves N live and untouched, the
-    sources/merge.py:275 staging-then-commit shape at directory
-    grain). Row-set-preserving by construction — a pure
-    repartition+rewrite; the pre/post candidate-equality test in
+    """Fold the current generation PLUS every committed-but-unfolded
+    delta (:func:`append_minhash_index_delta`) into ONE band-clustered
+    dataset (VERDICT r9 #5): repartition on ``band`` and sort each
+    partition by (band, band_key) — so row-group min/max stats prune
+    candidate lookups and the file count drops from O(appended batches
+    x partitions) back to O(bands) — then publish as generation N+1
+    via the atomic marker commit (crash before the commit leaves N
+    live and untouched; N stays readable one more generation).
+    Row-set-preserving by construction — a pure repartition+rewrite;
+    the pre/post candidate-equality test in
     tests/test_dedup_incremental.py pins it.
 
     Returns {"generation", "files_before", "files_after", "rows"}.
     """
-    from palegislature_spark.sources.merge import _hadoop_fs
-
     base = path.rstrip("/")
-    gen = _band_gen_current(spark, base)
+    fs, HPath = hadoop_fs(spark, base)
+    gen = current_generation(fs, HPath, base)
     if gen is None:
         raise ValueError(f"no committed MinHash index at {base}")
-    fs, HPath = _hadoop_fs(spark, base)
 
     def n_files(d: str) -> int:
-        return sum(
-            1
-            for st in fs.listStatus(HPath(d))
-            if st.getPath().getName().startswith("part-")
-        )
+        return sum(1 for f in names(fs, HPath, d) if f.startswith("part-"))
 
-    cur_dir = f"{base}/gen-{gen:06d}"
-    nxt_dir = f"{base}/gen-{gen + 1:06d}"
-    fw = _folded_high_water(fs, HPath, cur_dir)
-    delta_ids = sorted(
-        d for d in _committed_delta_ids(fs, HPath, base) if d > fw
-    )
-    # fold EXACTLY the pinned delta_ids snapshot — re-listing via
-    # load_minhash_index would race a concurrent streaming commit: a
-    # delta landing between the two listings would be folded into
-    # gen N+1 yet excluded from its _FOLDED high-water and from GC,
-    # so readers would double-count its rows forever (ADVICE r11)
-    cur = spark.read.parquet(
-        cur_dir, *[f"{base}/delta-{d:06d}" for d in delta_ids]
-    )
+    cur_dir = generation_dir(base, gen)
+    nxt_dir = generation_dir(base, gen + 1)
+    # fold EXACTLY the pinned delta snapshot (sources/commit.py
+    # DeltaLog.fold_by_swap: re-listing would race a concurrent append)
+    fw, delta_ids = MINHASH_DELTAS.unfolded(fs, HPath, base, cur_dir)
+    deltas = [MINHASH_DELTAS.path(base, d) for d in delta_ids]
+    cur = spark.read.parquet(cur_dir, *deltas)
     rows = cur.count()
     (
         cur.repartition("band")
@@ -1039,27 +903,13 @@ def compact_minhash_index(spark, path: str) -> dict:
         .write.mode("overwrite")
         .parquet(nxt_dir)
     )
-    # the folded high-water rides INSIDE the new generation directory,
-    # so it becomes visible atomically with the generation commit;
-    # folded deltas are then invisible to readers even before they are
-    # garbage-collected below (crash-safe delete-after-commit)
+    # the high-water rides INSIDE the new generation, visible
+    # atomically with its commit
     new_fw = max([fw] + delta_ids)
-    if new_fw >= 0:
-        out = fs.create(HPath(f"{nxt_dir}/_FOLDED-{new_fw:06d}"), True)
-        out.close()
-    files_before = n_files(cur_dir) + sum(
-        n_files(f"{base}/delta-{d:06d}") for d in delta_ids
-    )
-    _band_gen_commit(spark, base, gen + 1)
-    # GC by the committed high-water, not just this pass's delta_ids:
-    # a crash between a previous commit and its GC loop leaves folded
-    # deltas at/below the high-water that no later pass would revisit
-    # if GC were keyed on the current delta_ids — invisible to readers
-    # but a permanent disk/listing leak (ADVICE r11)
-    for d in _committed_delta_ids(fs, HPath, base):
-        if d <= new_fw:
-            fs.delete(HPath(f"{base}/delta-{d:06d}"), True)
-            fs.delete(HPath(f"{base}/{_DELTA_MARKER}{d:06d}"), False)
+    stamp_folded(fs, HPath, nxt_dir, new_fw)
+    files_before = n_files(cur_dir) + sum(n_files(d) for d in deltas)
+    commit_generation(fs, HPath, base, gen + 1)
+    MINHASH_DELTAS.gc(fs, HPath, base, new_fw)
     return {
         "generation": gen + 1,
         "files_before": files_before,

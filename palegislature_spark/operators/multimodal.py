@@ -303,7 +303,7 @@ def media_fingerprint(df: DataFrame) -> DataFrame:
     )
 
 
-def image_features(df: DataFrame, batch_hint: int = 1024, codec=None) -> DataFrame:
+def image_features(df: DataFrame, codec=None) -> DataFrame:
     """Per-payload decoded statistics via Arrow-batched mapInPandas.
 
     Output: (media_id, mean_px, checksum, n_bytes). The decode step
@@ -407,7 +407,7 @@ def audio_stats(payload: bytes, meta: dict | None) -> dict:
         }
 
 
-def audio_features(df: DataFrame, batch_hint: int = 1024) -> DataFrame:
+def audio_features(df: DataFrame) -> DataFrame:
     """Per-payload audio statistics via Arrow-batched mapInPandas.
 
     Output: (media_id, sample_rate, n_channels, n_samples,

@@ -51,6 +51,7 @@ from palegislature_spark.operators.similarity import (
     _norm,
     probe_lists,
 )
+from palegislature_spark.sources.commit import PQ_DELTAS, hadoop_fs, recover_swap
 
 
 def _sq_l2(a, b):
@@ -455,26 +456,10 @@ def ivfpq_refine(
 # IVF side already ingests per-window deltas (similarity.ivf_append_delta),
 # but ivfpq_topk ranks through the CODES table — without a codes delta a
 # streamed vector is probe-reachable yet un-rankable, so ADC serving
-# silently goes stale the moment a window commits.  Same discipline as
-# the IVF/MinHash twins: atomic per-batch delta markers, readers union
-# committed-but-unfolded deltas, compaction folds a PINNED snapshot with
-# the _FOLDED high-water promoted inside the staged swap, GC keyed on
-# the high-water.
+# silently goes stale the moment a window commits.  The codes family
+# runs the same sources/commit.py delta log as the IVF and MinHash
+# indexes (commit.PQ_DELTAS).
 # --------------------------------------------------------------------------
-
-_PQ_DELTA_MARKER = "_PQDELTA-"
-
-
-def _pq_committed_delta_ids(fs, HPath, base: str) -> list[int]:
-    ids = []
-    for st in fs.listStatus(HPath(base)):
-        name = st.getPath().getName()
-        if name.startswith(_PQ_DELTA_MARKER):
-            try:
-                ids.append(int(name[len(_PQ_DELTA_MARKER):]))
-            except ValueError:
-                continue
-    return ids
 
 
 def save_pq_index(
@@ -519,33 +504,18 @@ def pq_encode_delta(
     leaves an uncommitted, replay-overwritten directory.  Returns True
     iff newly committed.  O(batch * m * k) encode work — the one
     linear whole-stage-codegen pass of :func:`pq_encode`."""
-    from palegislature_spark.operators.similarity import (
-        _ivf_folded_high_water as _folded_hw,
-    )
-    from palegislature_spark.sources.merge import _hadoop_fs
-    from palegislature_spark.streaming.jobs import (
-        _recover_interrupted_swap,
-    )
-
     base = path.rstrip("/")
     codes_dir = f"{base}/codes"
-    fs, HPath = _hadoop_fs(spark, base)
-    _recover_interrupted_swap(fs, HPath, codes_dir)
-    marker = HPath(f"{base}/{_PQ_DELTA_MARKER}{batch_id:06d}")
-    if fs.exists(marker):
-        return False
-    if batch_id <= _folded_hw(fs, HPath, codes_dir):
-        return False
-    cb = spark.read.parquet(f"{base}/codebooks")
-    codes = pq_encode(new_vectors, cb, id_col, vec_col)
-    codes.write.mode("overwrite").parquet(
-        f"{base}/codes-delta-{batch_id:06d}"
-    )
-    tmp = HPath(f"{base}/{_PQ_DELTA_MARKER[:-1]}.tmp")
-    out = fs.create(tmp, True)
-    out.close()
-    fs.rename(tmp, marker)
-    return True
+    fs, HPath = hadoop_fs(spark, base)
+    recover_swap(fs, HPath, codes_dir)
+
+    def write(delta: str) -> None:
+        cb = spark.read.parquet(f"{base}/codebooks")
+        pq_encode(new_vectors, cb, id_col, vec_col).write.mode(
+            "overwrite"
+        ).parquet(delta)
+
+    return PQ_DELTAS.append(fs, HPath, base, codes_dir, batch_id, write)
 
 
 def load_pq_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
@@ -555,69 +525,20 @@ def load_pq_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
     :func:`compact_pq_codes`; uncommitted delta directories are
     invisible by construction.  Self-heals an interrupted compact swap
     on entry, the load_ivf_index discipline."""
-    from palegislature_spark.operators.similarity import (
-        _ivf_folded_high_water as _folded_hw,
-    )
-    from palegislature_spark.sources.merge import _hadoop_fs
-    from palegislature_spark.streaming.jobs import (
-        _recover_interrupted_swap,
-    )
-
     base = path.rstrip("/")
     codes_dir = f"{base}/codes"
-    fs, HPath = _hadoop_fs(spark, base)
-    _recover_interrupted_swap(fs, HPath, codes_dir)
-    fw = _folded_hw(fs, HPath, codes_dir)
-    paths = [codes_dir] + [
-        f"{base}/codes-delta-{d:06d}"
-        for d in sorted(_pq_committed_delta_ids(fs, HPath, base))
-        if d > fw
-    ]
+    fs, HPath = hadoop_fs(spark, base)
+    recover_swap(fs, HPath, codes_dir)
     return (
         spark.read.parquet(f"{base}/codebooks"),
-        spark.read.parquet(*paths),
+        spark.read.parquet(*PQ_DELTAS.read_paths(fs, HPath, base, codes_dir)),
     )
 
 
 def compact_pq_codes(spark, path: str) -> dict:
-    """Fold committed codes deltas back into ONE codes dataset: read
-    base + the PINNED unfolded-delta snapshot (never re-list — the
-    compaction-race rule, ADVICE r11), stamp the new ``_FOLDED``
-    high-water inside the staged dataset, promote with the crash-safe
-    staging swap, then GC every committed delta at or below the
-    promoted high-water.  Returns {"rows", "deltas_folded",
+    """Fold committed codes deltas back into ONE codes dataset with
+    the crash-safe staging swap and GC them (sources/commit.py
+    ``DeltaLog.fold_by_swap``).  Returns {"rows", "deltas_folded",
     "high_water"}."""
-    from palegislature_spark.operators.similarity import (
-        _ivf_folded_high_water as _folded_hw,
-        _promote_folded,
-    )
-    from palegislature_spark.sources.merge import _hadoop_fs
-    from palegislature_spark.streaming.jobs import (
-        _recover_interrupted_swap,
-    )
-
     base = path.rstrip("/")
-    codes_dir = f"{base}/codes"
-    fs, HPath = _hadoop_fs(spark, base)
-    _recover_interrupted_swap(fs, HPath, codes_dir)
-    fw = _folded_hw(fs, HPath, codes_dir)
-    delta_ids = sorted(
-        d for d in _pq_committed_delta_ids(fs, HPath, base) if d > fw
-    )
-    codes = spark.read.parquet(
-        codes_dir,
-        *[f"{base}/codes-delta-{d:06d}" for d in delta_ids],
-    )
-    merged = codes.localCheckpoint()
-    rows = merged.count()
-    new_fw = max([fw] + delta_ids)
-    _promote_folded(fs, HPath, codes_dir, merged, new_fw)
-    for d in _pq_committed_delta_ids(fs, HPath, base):
-        if d <= new_fw:
-            fs.delete(HPath(f"{base}/codes-delta-{d:06d}"), True)
-            fs.delete(HPath(f"{base}/{_PQ_DELTA_MARKER}{d:06d}"), False)
-    return {
-        "rows": rows,
-        "deltas_folded": len(delta_ids),
-        "high_water": new_fw,
-    }
+    return PQ_DELTAS.fold_by_swap(spark, base, f"{base}/codes")

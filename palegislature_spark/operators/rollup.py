@@ -112,7 +112,8 @@ def refresh_hourly(
     re-merge. Calls without ``batch_id`` (ad-hoc batch use) keep the
     additive semantics and stamp ``-1``.
     """
-    from palegislature_spark.sources.merge import _hadoop_fs, upsert_parquet
+    from palegislature_spark.sources.commit import hadoop_fs
+    from palegislature_spark.sources.merge import upsert_parquet
 
     partial = (
         batch.groupBy(
@@ -129,7 +130,7 @@ def refresh_hourly(
     # existence probe via the filesystem — a broad try/except around
     # the read would misclassify transient IO errors as "first
     # refresh" and silently drop the existing totals for touched keys
-    fs, HPath = _hadoop_fs(spark, path)
+    fs, HPath = hadoop_fs(spark, path)
     if fs.exists(HPath(path)):
         days = [r["day"] for r in partial.select("day").distinct().collect()]
         existing = spark.read.parquet(path).filter(

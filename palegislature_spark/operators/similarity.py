@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from palegislature_spark.sources.commit import IVF_DELTAS, hadoop_fs, recover_swap
+
 
 def _as_double(col: str):
     return F.transform(F.col(col), lambda x: x.cast("double"))
@@ -1194,39 +1196,6 @@ def save_ivf_index(
     )
 
 
-_IVF_DELTA_MARKER = "_IVFDELTA-"
-
-
-def _ivf_folded_high_water(fs, HPath, assign_dir: str) -> int:
-    """Highest delta batch id folded into the assignments dataset
-    (the ``_FOLDED-<id>`` file :func:`compact_ivf_index` writes into
-    the staged dataset BEFORE promoting it, so it becomes visible
-    atomically with the fold), or -1."""
-    if not fs.exists(HPath(assign_dir)):
-        return -1
-    best = -1
-    for st in fs.listStatus(HPath(assign_dir)):
-        name = st.getPath().getName()
-        if name.startswith("_FOLDED-"):
-            try:
-                best = max(best, int(name[len("_FOLDED-"):]))
-            except ValueError:
-                continue
-    return best
-
-
-def _ivf_committed_delta_ids(fs, HPath, base: str) -> list[int]:
-    ids = []
-    for st in fs.listStatus(HPath(base)):
-        name = st.getPath().getName()
-        if name.startswith(_IVF_DELTA_MARKER):
-            try:
-                ids.append(int(name[len(_IVF_DELTA_MARKER):]))
-            except ValueError:
-                continue
-    return ids
-
-
 def ivf_append_delta(
     spark,
     path: str,
@@ -1235,15 +1204,23 @@ def ivf_append_delta(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> bool:
-    """Streaming-grade :func:`ivf_append`: assign the micro-batch
-    against the FROZEN persisted centroids and publish it as its OWN
-    ``delta-<batch_id>`` directory with an atomic marker — the
-    operators/dedup.py ``append_minhash_index_delta`` discipline on
-    the IVF layout.  Idempotent under at-least-once replay (committed
-    marker, or batch id at or below the assignments' ``_FOLDED``
-    high-water => no-op); a crash mid-write leaves an uncommitted,
-    replay-overwritten directory.  Returns True iff newly committed.
-    O(batch * n_lists) work, the ivf_append cost contract.
+    """Incremental IVF maintenance: index a NEW vector batch into a
+    saved index (:func:`save_ivf_index`) without rebuilding — assign
+    only the batch against the FROZEN persisted centroids and publish
+    it as its OWN ``delta-<batch_id>`` directory with an atomic marker
+    (sources/commit.py).  O(batch * n_lists) work; the corpus already
+    indexed is never touched.  Idempotent under at-least-once replay
+    (committed marker, or batch id at or below the assignments'
+    ``_FOLDED`` high-water => no-op); a crash mid-write leaves an
+    uncommitted, replay-overwritten directory.  Returns True iff newly
+    committed.
+
+    Centroids are deliberately NOT re-trained per batch (standard IVF
+    serving practice: probes must keep matching the lists existing
+    vectors were filed under; re-cluster offline when list-size skew
+    accumulates — skew is observable from the assignments table).
+    Ids are append-only; the caller dedups a batch that may re-deliver
+    already-indexed ids (e.g. via the merge layer) before appending.
 
     If the index was saved with ``meta_cols`` (filtered-serving
     metadata beside each assignment row), the batch MUST carry those
@@ -1252,48 +1229,36 @@ def ivf_append_delta(
     built ones.  A batch missing a persisted metadata column raises —
     silently writing NULL metadata would make every filtered probe
     drop the streamed rows (ADVICE r11)."""
-    from palegislature_spark.sources.merge import _hadoop_fs
-
     base = path.rstrip("/")
     assign_dir = f"{base}/assignments"
-    fs, HPath = _hadoop_fs(spark, base)
+    fs, HPath = hadoop_fs(spark, base)
     # self-heal an interrupted compact swap before consulting the
     # _FOLDED high-water: with assignments/ missing the high-water
     # reads -1 and replayed, already-folded batches would re-commit
-    from palegislature_spark.streaming.jobs import (
-        _recover_interrupted_swap,
-    )
+    recover_swap(fs, HPath, assign_dir)
 
-    _recover_interrupted_swap(fs, HPath, assign_dir)
-    marker = HPath(f"{base}/{_IVF_DELTA_MARKER}{batch_id:06d}")
-    if fs.exists(marker):
-        return False
-    if batch_id <= _ivf_folded_high_water(fs, HPath, assign_dir):
-        return False
-    cents = spark.read.parquet(f"{base}/centroids")
-    assigned = assign_to_centroids(new_vectors, cents, id_col, vec_col)
-    persisted_cols = spark.read.parquet(assign_dir).columns
-    extra = [c for c in persisted_cols if c not in assigned.columns]
-    if extra:
-        missing = [c for c in extra if c not in new_vectors.columns]
-        if missing:
-            raise ValueError(
-                f"index at {base} persists metadata columns {extra} "
-                f"but the batch lacks {missing}; filtered serving "
-                "(ivf_probe where=...) would silently drop every "
-                "streamed row written with NULL metadata"
+    def write(delta: str) -> None:
+        cents = spark.read.parquet(f"{base}/centroids")
+        assigned = assign_to_centroids(new_vectors, cents, id_col, vec_col)
+        persisted_cols = spark.read.parquet(assign_dir).columns
+        extra = [c for c in persisted_cols if c not in assigned.columns]
+        if extra:
+            missing = [c for c in extra if c not in new_vectors.columns]
+            if missing:
+                raise ValueError(
+                    f"index at {base} persists metadata columns {extra} "
+                    f"but the batch lacks {missing}; filtered serving "
+                    "(ivf_probe where=...) would silently drop every "
+                    "streamed row written with NULL metadata"
+                )
+            assigned = assigned.join(
+                new_vectors.select(id_col, *extra), id_col
             )
-        assigned = assigned.join(
-            new_vectors.select(id_col, *extra), id_col
-        )
-    assigned.select(*persisted_cols).repartition(
-        "list_id"
-    ).write.mode("overwrite").parquet(f"{base}/delta-{batch_id:06d}")
-    tmp = HPath(f"{base}/{_IVF_DELTA_MARKER[:-1]}.tmp")
-    out = fs.create(tmp, True)
-    out.close()
-    fs.rename(tmp, marker)
-    return True
+        assigned.select(*persisted_cols).repartition(
+            "list_id"
+        ).write.mode("overwrite").parquet(delta)
+
+    return IVF_DELTAS.append(fs, HPath, base, assign_dir, batch_id, write)
 
 
 def load_ivf_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
@@ -1306,106 +1271,30 @@ def load_ivf_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
     Self-heals an interrupted :func:`compact_ivf_index` swap first
     (live renamed aside, crash before staging promoted), so a reader
     arriving after a compactor crash sees the newest complete
-    assignments instead of a missing-directory error — the same
-    recovery discipline the streaming sinks run on entry."""
-    from palegislature_spark.sources.merge import _hadoop_fs
-    from palegislature_spark.streaming.jobs import (
-        _recover_interrupted_swap,
-    )
-
+    assignments instead of a missing-directory error."""
     base = path.rstrip("/")
     assign_dir = f"{base}/assignments"
-    fs, HPath = _hadoop_fs(spark, base)
-    _recover_interrupted_swap(fs, HPath, assign_dir)
-    fw = _ivf_folded_high_water(fs, HPath, assign_dir)
-    paths = [assign_dir] + [
-        f"{base}/delta-{d:06d}"
-        for d in sorted(_ivf_committed_delta_ids(fs, HPath, base))
-        if d > fw
-    ]
+    fs, HPath = hadoop_fs(spark, base)
+    recover_swap(fs, HPath, assign_dir)
     return (
         spark.read.parquet(f"{base}/centroids"),
-        spark.read.parquet(*paths),
+        spark.read.parquet(*IVF_DELTAS.read_paths(fs, HPath, base, assign_dir)),
     )
-
-
-def _promote_folded(fs, HPath, live_dir: str, merged, new_fw: int) -> None:
-    """Promote a folded dataset over ``live_dir`` with the streaming
-    swap discipline, the ``_FOLDED`` high-water landing inside STAGING
-    before ``_SUCCESS`` marks it promotable — recovery must never
-    promote a fold whose high-water is missing (deltas would
-    double-count); ``_SUCCESS`` is deleted around the marker write and
-    recreated last.  Shared by the IVF assignments and PQ codes
-    compactors (operators/pq.py)."""
-    staging = live_dir + ".__staging__"
-    trash = live_dir + ".__old__"
-    fs.delete(HPath(staging), True)
-    merged.write.mode("overwrite").parquet(staging)
-    fs.delete(HPath(staging + "/_SUCCESS"), False)
-    if new_fw >= 0:
-        out = fs.create(HPath(f"{staging}/_FOLDED-{new_fw:06d}"), True)
-        out.close()
-    out = fs.create(HPath(staging + "/_SUCCESS"), True)
-    out.close()
-    fs.delete(HPath(trash), True)
-    if fs.exists(HPath(live_dir)):
-        fs.rename(HPath(live_dir), HPath(trash))
-    fs.rename(HPath(staging), HPath(live_dir))
-    fs.delete(HPath(trash), True)
 
 
 def compact_ivf_index(spark, path: str) -> dict:
     """Fold committed streaming deltas back into ONE list-clustered
-    assignments dataset: read base + unfolded deltas, repartition on
+    assignments dataset: base + unfolded deltas, repartitioned on
     ``list_id`` (each inverted list physically co-located again, the
-    save_ivf_index layout), stamp the new ``_FOLDED`` high-water
-    INSIDE the staged dataset, and promote it with the crash-safe
-    staging swap (streaming/jobs.py discipline: live is renamed aside
-    before staging promotes, so no crash point leaves zero live
-    copies).  Folded delta directories are then garbage-collected —
-    already invisible to readers via the high-water, so a crash
-    between promote and GC changes nothing.  Returns {"rows",
-    "deltas_folded", "high_water"}."""
-    from palegislature_spark.sources.merge import _hadoop_fs
-    from palegislature_spark.streaming.jobs import (
-        _recover_interrupted_swap,
-    )
-
+    save_ivf_index layout), promoted by the crash-safe staging swap
+    with the new ``_FOLDED`` high-water inside; folded deltas are then
+    garbage-collected (sources/commit.py ``DeltaLog.fold_by_swap``).
+    Returns {"rows", "deltas_folded", "high_water"}."""
     base = path.rstrip("/")
-    assign_dir = f"{base}/assignments"
-    fs, HPath = _hadoop_fs(spark, base)
-    _recover_interrupted_swap(fs, HPath, assign_dir)
-    fw = _ivf_folded_high_water(fs, HPath, assign_dir)
-    delta_ids = sorted(
-        d for d in _ivf_committed_delta_ids(fs, HPath, base) if d > fw
+    return IVF_DELTAS.fold_by_swap(
+        spark, base, f"{base}/assignments",
+        layout=lambda df: df.repartition("list_id"),
     )
-    # fold EXACTLY the pinned delta_ids snapshot — re-listing via
-    # load_ivf_index here would race a concurrent streaming commit:
-    # a delta landing between the two listings would be folded into
-    # the new generation yet excluded from the high-water and GC, so
-    # readers would double-count its rows forever (ADVICE r11)
-    assignments = spark.read.parquet(
-        assign_dir,
-        *[f"{base}/delta-{d:06d}" for d in delta_ids],
-    )
-    merged = assignments.repartition("list_id").localCheckpoint()
-    rows = merged.count()
-    new_fw = max([fw] + delta_ids)
-    _promote_folded(fs, HPath, assign_dir, merged, new_fw)
-    # GC by the promoted high-water, not just this pass's delta_ids:
-    # a crash between a previous promote and its GC loop leaves folded
-    # deltas at/below the high-water that no later pass would revisit
-    # if GC were keyed on the current delta_ids — invisible to readers
-    # but a permanent disk/listing leak (ADVICE r11)
-    for d in _ivf_committed_delta_ids(fs, HPath, base):
-        if d <= new_fw:
-            fs.delete(HPath(f"{base}/delta-{d:06d}"), True)
-            fs.delete(HPath(f"{base}/{_IVF_DELTA_MARKER}{d:06d}"), False)
-    return {
-        "rows": rows,
-        "deltas_folded": len(delta_ids),
-        "high_water": new_fw,
-    }
 
 
 def max_cosine_vs_eval(
@@ -1514,33 +1403,3 @@ def assign_to_centroids(
     )
     out = _assign_exact_arrow(centroids, vecs, "__id", "__v", "__id", "__vec")
     return out.select(F.col("__id").alias(id_col), "list_id", "__vec")
-
-
-def ivf_append(
-    spark,
-    path: str,
-    new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental IVF maintenance: index a NEW vector batch into a
-    saved index (:func:`save_ivf_index`) without rebuilding — assign
-    only the batch against the persisted centroids and append to the
-    assignments dataset. Cost is O(batch * n_lists) + one append
-    write; the corpus already indexed is never touched (the MinHash
-    incremental-index pattern, operators/dedup.py, applied to IVF).
-
-    Centroids are deliberately NOT re-trained per batch (standard IVF
-    serving practice: probes must keep matching the lists existing
-    vectors were filed under; re-cluster offline when list-size skew
-    accumulates — skew is observable from the assignments table).
-    Contract: ids are append-only; the caller dedups a batch that may
-    re-deliver already-indexed ids (e.g. via the merge layer) before
-    appending.
-    """
-    base = path.rstrip("/")
-    cents = spark.read.parquet(f"{base}/centroids")
-    assigned = assign_to_centroids(new_vectors, cents, id_col, vec_col)
-    assigned.repartition("list_id").write.mode("append").parquet(
-        f"{base}/assignments"
-    )

@@ -908,10 +908,11 @@ WHERE c * 1.0 / (c1.n + c2.n - c) >= 0.8
 def banded_minhash_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_minhash_incremental's on-disk lifecycle twin: the corpus
     (doc_id % 5 != 0) reaches the index through THREE writes — a save
-    plus two appends (doc_id % 3 epochs) — exactly how a crawl
-    frontier accretes band files; compact_minhash_index then folds
-    the accumulated files into one band-clustered generation (atomic
-    marker commit, old generation retained one cycle). The arriving
+    plus two delta appends (doc_id % 3 epochs, each committed by its
+    own marker) — exactly how a crawl frontier accretes band files;
+    compact_minhash_index then folds the generation and both deltas
+    into one band-clustered generation (atomic marker commit, old
+    generation retained one cycle). The arriving
     batch (doc_id % 5 = 0) dedups against the compacted index and
     must return the identical batch-touching exact-Jaccard pair set
     the single-shot index serves — compaction is row-set-preserving
@@ -929,8 +930,8 @@ def banded_minhash_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         root,
     )
     for epoch in (1, 2):
-        dedup.append_minhash_index(
-            spark, root, corpus.filter(f"doc_id % 3 = {epoch}"),
+        dedup.append_minhash_index_delta(
+            spark, root, corpus.filter(f"doc_id % 3 = {epoch}"), epoch,
             "doc_id", "text", n=3,
         )
     dedup.compact_minhash_index(spark, root)

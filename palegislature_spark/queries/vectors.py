@@ -857,7 +857,7 @@ def ann_ivfpq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ann_ivf_append",
     covers="similarity-search extension: IVF serving MAINTENANCE — a "
     "frozen index built on the corpus prefix, a new-arrivals batch "
-    "assigned against the FROZEN centroids (ivf_append's core) and "
+    "assigned against the FROZEN centroids (ivf_append_delta's core) and "
     "appended, then multiprobe serving (n_probe=4) over the merged "
     "lists; the oracle exploits the append identity (batch-vs-frozen "
     "assignment == full-corpus assignment against the same centroids) "
@@ -937,14 +937,14 @@ FROM ranked WHERE rank <= 5
 )
 def ann_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF incremental-serving anchor (the registry row for
-    operators/similarity.py ivf_append + multiprobe, previously only
+    operators/similarity.py ivf_append_delta + multiprobe, previously only
     equality-tested in tests/test_ivf.py):
 
     - the index generation is built on the corpus PREFIX (vec_id %
       10 != 0), 1 Lloyd iteration, exact_replay for the oracle twin;
     - the new-arrivals batch (vec_id % 10 == 0) is assigned against
       the FROZEN centroids via assign_to_centroids — exactly what
-      ivf_append does before its parquet append, minus the write —
+      ivf_append_delta does before its delta write, minus the write —
       and unioned into the inverted lists;
     - the batch then probes the merged index at n_probe=4 (multiprobe
       serving; the recall/candidate-volume ladder over n_probe is
@@ -1296,7 +1296,7 @@ FROM t2
     "audit_embedding_drift",
     covers="training-pipeline extension: EMBEDDING distribution-shift "
     "gate (VERDICT r9 #4) — both corpus generations assigned to "
-    "centroids FROZEN on the previous generation (ivf_append's "
+    "centroids FROZEN on the previous generation (ivf_append_delta's "
     "assignment), per-list mass vectors compared with the total "
     "variation distance; the statistic's numerator is a SUM of "
     "DECIMAL(38,0) integer cross-products (order-free like the KS "

@@ -21,16 +21,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """Hadoop FileSystem + Path class for ``path``'s scheme (works for
-    file:, hdfs:, s3a: alike — the swap logic below is scheme-agnostic)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-        jvm.java.net.URI.create(path), conf
-    )
-    return fs, jvm.org.apache.hadoop.fs.Path
+from palegislature_spark.sources.commit import (
+    MANIFEST,
+    STAGING,
+    commit_marker,
+    hadoop_fs,
+    marker_ids,
+    names,
+    prune,
+    recover_swap,
+    swap,
+)
 
 
 def merge_by_key(
@@ -134,67 +135,38 @@ def upsert_parquet(
         return
 
     base = path.rstrip("/")
-    staging = base + ".__staging__"
-    fs, HPath = _hadoop_fs(spark, base)
+    fs, HPath = hadoop_fs(spark, base)
+    if not partition_cols:
+        swap(fs, HPath, base, merged)
+        return
+    staging = base + STAGING
     fs.delete(HPath(staging), True)
-
-    writer = merged.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(staging)
-
-    if partition_cols:
-        _swap_partitions(fs, HPath, staging, base, len(partition_cols))
-        fs.delete(HPath(staging), True)
-    else:
-        trash = base + ".__old__"
-        fs.delete(HPath(trash), True)
-        fs.rename(HPath(base), HPath(trash))
-        fs.rename(HPath(staging), HPath(base))
-        fs.delete(HPath(trash), True)
+    merged.write.mode("overwrite").partitionBy(*partition_cols).parquet(staging)
+    _swap_partitions(fs, HPath, staging, base, len(partition_cols))
+    fs.delete(HPath(staging), True)
 
 
 def _repair_interrupted_swap(spark: SparkSession, path: str) -> None:
-    """Finish (or discard) the publish of a crashed previous
-    ``upsert_parquet`` call — run automatically at the start of every
-    call, making the swap protocol crash-recoverable under the
-    single-writer convention:
-
-    * staging absent: nothing to do (a leftover ``.__old__`` trash dir
-      from a crash after the final rename is deleted lazily by the
-      next swap).
-    * staging present WITHOUT ``_SUCCESS``: the crash hit mid-write —
-      the staged merge is incomplete and the live dataset was never
-      touched; discard staging.
-    * staging present WITH ``_SUCCESS``: the staged merge is complete,
-      so the crash hit the swap window. Whole-dataset mode (live dir
-      missing — the crash fell between ``rename(live -> trash)`` and
-      ``rename(staging -> live)``): finish by renaming staging in and
-      deleting trash. Partitioned mode (staging holds ``col=value``
-      leaves; already-swapped leaves were MOVED out of staging, so
-      the remainder is exactly the unfinished set): re-run the leaf
-      swaps idempotently, which also heals a leaf caught between its
-      delete and rename. A reader therefore never observes a
-      half-merged table: each partition (or the whole dataset) is
-      always at its complete old or complete new state, and the
-      repair converges it to the new one.
+    """Finish the publish of a crashed previous ``upsert_parquet``
+    call — run automatically at the start of every call, making the
+    swap protocol crash-recoverable under the single-writer
+    convention. Partitioned mode (a complete staging that holds
+    ``col=value`` leaves; already-swapped leaves were MOVED out of
+    staging, so the remainder is exactly the unfinished set): re-run
+    the leaf swaps idempotently, which also heals a leaf caught
+    between its delete and rename. Whole-dataset mode:
+    :func:`~palegislature_spark.sources.commit.recover_swap`. An
+    incomplete staging (no ``_SUCCESS``: the crash hit mid-write and
+    live was never touched) is discarded by the next swap before it
+    writes. A reader therefore never observes a half-merged table:
+    each partition (or the whole dataset) is always at its complete
+    old or complete new state.
     """
     base = path.rstrip("/")
-    staging = base + ".__staging__"
-    fs, HPath = _hadoop_fs(spark, base)
-    if not fs.exists(HPath(staging)):
-        return
-    if not fs.exists(HPath(staging + "/_SUCCESS")):
-        fs.delete(HPath(staging), True)
-        return
-    leaves = [
-        st
-        for st in fs.listStatus(HPath(staging))
-        if st.isDirectory() and "=" in st.getPath().getName()
-    ]
-    if leaves:
-        depth = 1
-        probe = leaves[0].getPath().toString()
+    staging = base + STAGING
+    fs, HPath = hadoop_fs(spark, base)
+    if fs.exists(HPath(staging + "/_SUCCESS")):
+        depth, probe = 0, staging
         while True:
             subs = [
                 st
@@ -205,17 +177,11 @@ def _repair_interrupted_swap(spark: SparkSession, path: str) -> None:
                 break
             depth += 1
             probe = subs[0].getPath().toString()
-        _swap_partitions(fs, HPath, staging, base, depth)
-        fs.delete(HPath(staging), True)
-        return
-    trash = base + ".__old__"
-    if not fs.exists(HPath(base)):
-        fs.rename(HPath(staging), HPath(base))
-        fs.delete(HPath(trash), True)
-    else:
-        # live dir intact: the crash hit before the first rename —
-        # the staged output is stale relative to the upcoming merge
-        fs.delete(HPath(staging), True)
+        if depth:
+            _swap_partitions(fs, HPath, staging, base, depth)
+            fs.delete(HPath(staging), True)
+            return
+    recover_swap(fs, HPath, base)
 
 
 def _swap_partitions(fs, HPath, staging: str, live: str, depth: int) -> None:
@@ -369,7 +335,7 @@ def upsert_parquet_rowlevel(
             "generation": 0,
         }
 
-    fs0, HPath0 = _hadoop_fs(spark, base)
+    fs0, HPath0 = hadoop_fs(spark, base)
     for st in fs0.listStatus(HPath0(base)):
         if st.isDirectory() and "=" in st.getPath().getName():
             raise ValueError(
@@ -435,7 +401,7 @@ def upsert_parquet_rowlevel(
     )
 
     staging = base + ".__rowstage__"
-    fs, HPath = _hadoop_fs(spark, base)
+    fs, HPath = hadoop_fs(spark, base)
     fs.delete(HPath(staging), True)
     merged.write.mode("overwrite").parquet(staging)
     # count from staged footers, BEFORE anything is retired — merged's
@@ -479,9 +445,6 @@ def upsert_parquet_rowlevel(
     }
 
 
-MANIFEST_PREFIX = "_MANIFEST-"
-
-
 def _commit_manifest(
     spark: SparkSession,
     path: str,
@@ -516,17 +479,15 @@ def _commit_manifest(
     so plain directory reads are unaffected.
     """
     base = path.rstrip("/")
-    fs, HPath = _hadoop_fs(spark, base)
+    fs, HPath = hadoop_fs(spark, base)
     prev = _read_manifest(spark, base)
     if generation is None:
         generation = (prev["generation"] + 1) if prev else 1
     if files is None:
         skip = exclude or set()
         files = {
-            st.getPath().getName()
-            for st in fs.listStatus(HPath(base))
-            if st.getPath().getName().startswith("part-")
-            and st.getPath().getName() not in skip
+            n for n in names(fs, HPath, base)
+            if n.startswith("part-") and n not in skip
         }
     payload = json.dumps(
         {
@@ -535,21 +496,8 @@ def _commit_manifest(
             "retire": sorted(retire or ()),
         }
     ).encode()
-    tmp = HPath(f"{base}/{MANIFEST_PREFIX[:-1]}.tmp")
-    out = fs.create(tmp, True)
-    out.write(bytearray(payload))
-    out.close()
-    fs.rename(tmp, HPath(f"{base}/{MANIFEST_PREFIX}{generation:012d}"))
-    # prune manifests older than the previous generation
-    for st in fs.listStatus(HPath(base)):
-        name = st.getPath().getName()
-        if name.startswith(MANIFEST_PREFIX):
-            try:
-                g = int(name[len(MANIFEST_PREFIX):])
-            except ValueError:
-                continue
-            if g < generation - 1:
-                fs.delete(st.getPath(), False)
+    commit_marker(fs, HPath, base, MANIFEST, generation, payload, width=12)
+    prune(fs, HPath, base, MANIFEST, generation - 1)
     return generation
 
 
@@ -557,17 +505,8 @@ def _read_manifest(
     spark: SparkSession, path: str, generation: int | None = None
 ) -> dict | None:
     base = path.rstrip("/")
-    fs, HPath = _hadoop_fs(spark, base)
-    if not fs.exists(HPath(base)):
-        return None
-    gens = []
-    for st in fs.listStatus(HPath(base)):
-        name = st.getPath().getName()
-        if name.startswith(MANIFEST_PREFIX):
-            try:
-                gens.append(int(name[len(MANIFEST_PREFIX):]))
-            except ValueError:
-                continue
+    fs, HPath = hadoop_fs(spark, base)
+    gens = marker_ids(fs, HPath, base, MANIFEST)
     if not gens:
         return None
     if generation is not None:
@@ -581,7 +520,7 @@ def _read_manifest(
         pick = generation
     else:
         pick = max(gens)
-    mpath = HPath(f"{base}/{MANIFEST_PREFIX}{pick:012d}")
+    mpath = HPath(f"{base}/{MANIFEST}{pick:012d}")
     stream = fs.open(mpath)
     try:
         # py4j passes arrays by value — a Java-side readFully cannot
@@ -656,7 +595,7 @@ def vacuum(spark: SparkSession, path: str) -> int:
     m = _read_manifest(spark, base)
     if m is None or not m.get("retire"):
         return 0
-    fs, HPath = _hadoop_fs(spark, base)
+    fs, HPath = hadoop_fs(spark, base)
     for name in m["retire"]:
         fs.delete(HPath(f"{base}/{name}"), False)
     _commit_manifest(spark, base, files=set(m["files"]))
@@ -688,7 +627,7 @@ def compact_files(
     exist — nothing to gain).
     """
     base = path.rstrip("/")
-    fs, HPath = _hadoop_fs(spark, base)
+    fs, HPath = hadoop_fs(spark, base)
     manifest = _read_manifest(spark, base)
     if manifest is None:
         # same legacy bootstrap as the row-level merge: commit the

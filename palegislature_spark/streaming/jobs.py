@@ -28,6 +28,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from palegislature_spark.sources.commit import (
+    IVF_DELTAS,
+    MINHASH_DELTAS,
+    current_generation,
+    generation_dir,
+    hadoop_fs,
+    recover_swap,
+    swap,
+)
 from palegislature_spark.sources.merge import upsert_parquet
 
 
@@ -488,37 +497,6 @@ def run_available_now(
     )
 
 
-def _recover_interrupted_swap(fs, HPath, base: str) -> None:
-    """Recover an interrupted staging-promote swap: if live is
-    missing, staging (if it committed - _SUCCESS present) holds the
-    newest complete state, else .__old__ holds the previous one.
-    Never delete a candidate before a live copy exists."""
-    staging = base + ".__staging__"
-    trash = base + ".__old__"
-    if not fs.exists(HPath(base)):
-        if fs.exists(HPath(staging + "/_SUCCESS")):
-            fs.rename(HPath(staging), HPath(base))
-        elif fs.exists(HPath(trash)):
-            fs.rename(HPath(trash), HPath(base))
-
-
-def _promote_swap(fs, HPath, base: str, df: DataFrame) -> None:
-    """Write ``df`` to staging and promote it to ``base`` with the
-    crash-safe rename dance: live is renamed aside BEFORE staging is
-    promoted, so no crash point leaves zero live copies (the
-    interrupted states are exactly what :func:`_recover_interrupted_swap`
-    repairs on next entry)."""
-    staging = base + ".__staging__"
-    trash = base + ".__old__"
-    fs.delete(HPath(staging), True)
-    df.write.mode("overwrite").parquet(staging)
-    fs.delete(HPath(trash), True)
-    if fs.exists(HPath(base)):
-        fs.rename(HPath(base), HPath(trash))
-    fs.rename(HPath(staging), HPath(base))
-    fs.delete(HPath(trash), True)
-
-
 def _additive_state_sink(path: str, batch_table, merge_tables):
     """Shared foreachBatch sink for ADDITIVE dimension-sized state
     (CMS sketches, category histograms): per-batch table merged into
@@ -528,18 +506,17 @@ def _additive_state_sink(path: str, batch_table, merge_tables):
     ``batch_table(batch) -> DataFrame`` builds the per-batch state
     rows; ``merge_tables(live, new) -> DataFrame`` folds them into the
     live table (must aggregate ``last_batch`` with max). Durability:
-    the :func:`_promote_swap` / :func:`_recover_interrupted_swap`
-    discipline. At-least-once replay: a batch id at or below the
-    persisted high-water mark is a no-op, which keeps the additive
-    merge exactly-once under foreachBatch's at-least-once contract.
+    the sources/commit.py ``swap`` / ``recover_swap`` discipline.
+    At-least-once replay: a batch id at or below the persisted
+    high-water mark is a no-op, which keeps the additive merge
+    exactly-once under foreachBatch's at-least-once contract.
     """
-    from palegislature_spark.sources.merge import _hadoop_fs
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         base = path.rstrip("/")
-        fs, HPath = _hadoop_fs(spark, base)
-        _recover_interrupted_swap(fs, HPath, base)
+        fs, HPath = hadoop_fs(spark, base)
+        recover_swap(fs, HPath, base)
 
         t = batch_table(batch).withColumn(
             "last_batch", F.lit(batch_id).cast("bigint")
@@ -553,7 +530,7 @@ def _additive_state_sink(path: str, batch_table, merge_tables):
             else:  # pre-upgrade state without the idempotence column
                 live = live.withColumn("last_batch", F.lit(-1).cast("bigint"))
             t = merge_tables(live, t)
-        _promote_swap(fs, HPath, base, t)
+        swap(fs, HPath, base, t)
 
     return sink
 
@@ -801,15 +778,14 @@ def corpus_delta_stream(
     recomputes identical window rows, which the by-batch-id overwrite
     dedupes; a batch at or below the map's mark is a full no-op.
     """
-    from palegislature_spark.sources.merge import _hadoop_fs
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         map_base = path.rstrip("/") + "/fingerprints"
         win_base = path.rstrip("/") + "/windows"
-        fs, HPath = _hadoop_fs(spark, map_base)
-        _recover_interrupted_swap(fs, HPath, map_base)
-        _recover_interrupted_swap(fs, HPath, win_base)
+        fs, HPath = hadoop_fs(spark, map_base)
+        recover_swap(fs, HPath, map_base)
+        recover_swap(fs, HPath, win_base)
 
         deleted = (
             F.col(deleted_col).cast("boolean")
@@ -933,8 +909,8 @@ def corpus_delta_stream(
                 )
             )
         ).localCheckpoint()
-        _promote_swap(fs, HPath, win_base, win_rows)
-        _promote_swap(fs, HPath, map_base, new_map)
+        swap(fs, HPath, win_base, win_rows)
+        swap(fs, HPath, map_base, new_map)
 
     return (
         stream.writeStream.foreachBatch(sink)
@@ -1008,10 +984,13 @@ def minhash_index_stream(
             id_col=id_col, text_col=text_col,
             n=n, num_hashes=num_hashes, bands=bands,
         )
-        if max_deltas is not None and _unfolded_minhash_deltas(
-            spark, path
-        ) > max_deltas:
-            compact_minhash_index(spark, path)
+        if max_deltas is not None:
+            base = path.rstrip("/")
+            fs, HPath = hadoop_fs(spark, base)
+            gen_dir = generation_dir(base, current_generation(fs, HPath, base))
+            _, unfolded = MINHASH_DELTAS.unfolded(fs, HPath, base, gen_dir)
+            if len(unfolded) > max_deltas:
+                compact_minhash_index(spark, path)
 
     return (
         stream.writeStream.foreachBatch(sink)
@@ -1029,7 +1008,7 @@ def ivf_index_stream(
     max_deltas: int | None = None,
 ) -> "StreamingQuery":
     """Streaming ingest leg of the persisted IVF index
-    (operators/similarity.py save_ivf_index -> ivf_append xN): every
+    (operators/similarity.py save_ivf_index -> ivf_append_delta xN): every
     window's vectors are assigned against the FROZEN persisted
     centroids and committed as an atomic ``delta-<batch_id>``
     directory (``ivf_append_delta``), so ``load_ivf_index`` +
@@ -1065,9 +1044,9 @@ def ivf_index_stream(
         ivf_append_delta(
             spark, path, batch, batch_id, id_col=id_col, vec_col=vec_col,
         )
-        if max_deltas is not None and _unfolded_ivf_deltas(
-            spark, path
-        ) > max_deltas:
+        if max_deltas is not None and _ivf_compaction_due(
+            spark, path, max_deltas
+        ):
             compact_ivf_index(spark, path)
 
     return (
@@ -1078,38 +1057,13 @@ def ivf_index_stream(
     )
 
 
-def _unfolded_minhash_deltas(spark, path: str) -> int:
-    """Committed MinHash deltas the current generation has not folded
-    — the reader's union width, the auto-compaction trigger metric."""
-    from palegislature_spark.operators.dedup import (
-        _band_gen_current,
-        _committed_delta_ids,
-        _folded_high_water,
-    )
-    from palegislature_spark.sources.merge import _hadoop_fs
-
+def _ivf_compaction_due(spark, path: str, max_deltas: int) -> bool:
+    """More than ``max_deltas`` committed IVF deltas are unfolded — the
+    reader's union width, the auto-compaction trigger."""
     base = path.rstrip("/")
-    gen = _band_gen_current(spark, base)
-    fs, HPath = _hadoop_fs(spark, base)
-    fw = _folded_high_water(fs, HPath, f"{base}/gen-{gen:06d}")
-    return sum(1 for d in _committed_delta_ids(fs, HPath, base) if d > fw)
-
-
-def _unfolded_ivf_deltas(spark, path: str) -> int:
-    """Committed IVF deltas not folded into assignments — the
-    reader's union width, the auto-compaction trigger metric."""
-    from palegislature_spark.operators.similarity import (
-        _ivf_committed_delta_ids,
-        _ivf_folded_high_water,
-    )
-    from palegislature_spark.sources.merge import _hadoop_fs
-
-    base = path.rstrip("/")
-    fs, HPath = _hadoop_fs(spark, base)
-    fw = _ivf_folded_high_water(fs, HPath, f"{base}/assignments")
-    return sum(
-        1 for d in _ivf_committed_delta_ids(fs, HPath, base) if d > fw
-    )
+    fs, HPath = hadoop_fs(spark, base)
+    _, unfolded = IVF_DELTAS.unfolded(fs, HPath, base, f"{base}/assignments")
+    return len(unfolded) > max_deltas
 
 
 def ivfpq_index_stream(
@@ -1158,9 +1112,9 @@ def ivfpq_index_stream(
         pq_encode_delta(
             spark, path, batch, batch_id, id_col=id_col, vec_col=vec_col,
         )
-        if max_deltas is not None and _unfolded_ivf_deltas(
-            spark, path
-        ) > max_deltas:
+        if max_deltas is not None and _ivf_compaction_due(
+            spark, path, max_deltas
+        ):
             compact_ivf_index(spark, path)
             compact_pq_codes(spark, path)
 

@@ -67,6 +67,18 @@ def test_decontaminate_reports_short_docs_clean(spark):
     assert out[2].contaminated
 
 
+def test_decontaminate_short_doc_clean_under_hash_collision(spark, monkeypatch):
+    """A doc shorter than n words has one NULL gram; its hash must stay
+    NULL. xxhash64(NULL) is the seed 42, so an eval gram that hashes to
+    42 would otherwise flag the short doc. A constant hash forces that
+    collision."""
+    monkeypatch.setattr(F, "xxhash64", lambda *cols: F.lit(42).cast("long"))
+    train = _docs(spark, [(1, "only three words")])
+    eval_df = _docs(spark, [(9, "a b c d e")])
+    out = decontaminate(train, eval_df, n=5).collect()
+    assert [(r.doc_id, r.n_hit, r.contaminated) for r in out] == [(1, 0, False)]
+
+
 def test_decontaminate_shuffle_path_equals_broadcast(spark, sf_dir):
     """The >5M-gram fallback (broadcast_eval=False) must produce
     exactly the broadcast path's rows — the left-join restructure has

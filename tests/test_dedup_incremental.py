@@ -92,8 +92,8 @@ def test_index_lifecycle_compaction_preserves_served_candidates(
         root,
     )
     for epoch in (1, 2):
-        dedup.append_minhash_index(
-            spark, root, corpus.filter(f"doc_id % 3 = {epoch}"),
+        dedup.append_minhash_index_delta(
+            spark, root, corpus.filter(f"doc_id % 3 = {epoch}"), epoch,
             "doc_id", "text", n=3,
         )
     before = dedup.load_minhash_index(spark, root)

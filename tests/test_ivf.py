@@ -475,7 +475,7 @@ def test_ivf_append_equals_frozen_full_assignment(spark, tmp_path, skewed):
     similarity.save_ivf_index(base, idx, n_lists=4, refine_iters=1)
     cents, _ = similarity.load_ivf_index(spark, idx)
 
-    similarity.ivf_append(spark, idx, batch)
+    assert similarity.ivf_append_delta(spark, idx, batch, 0)
     _, assigns = similarity.load_ivf_index(spark, idx)
 
     expected = similarity.assign_to_centroids(skewed, cents)
@@ -563,7 +563,7 @@ def test_arrow_exact_assign_bit_identical_to_expression(skewed):
 
 
 def test_assign_to_centroids_arrow_exact_bit_identical(skewed):
-    """assign_to_centroids (frozen-centroid batch path: ivf_append /
+    """assign_to_centroids (frozen-centroid batch path: ivf_append_delta /
     drift audits / streaming ingest) — kernel vs expression twin
     (tests/reference_impls.py)."""
     cents, _ = similarity.ivf_assignments(skewed, n_lists=4, refine_iters=1)

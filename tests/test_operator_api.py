@@ -2,15 +2,18 @@
 
 An expression twin that exists only to pin a kernel's bit-equality
 lives in tests/reference_impls.py, never behind an operator switch,
-and kernels measured as losers stay deleted.  Pure introspection — no
-Spark session.
+kernels measured as losers stay deleted, and persisted datasets
+commit through palegislature_spark.sources.commit only.  Pure
+introspection — no Spark session.
 """
 
 from __future__ import annotations
 
 import importlib
 import inspect
+import pathlib
 import pkgutil
+import re
 
 import pytest
 
@@ -71,7 +74,43 @@ def test_no_operator_takes_an_impl_switch():
         ("palegislature_spark.operators.graph", "_fold_sums_arrow"),
         ("palegislature_spark.streaming", "value_transitions_tws"),
         ("palegislature_spark.streaming.jobs", "value_transitions_tws"),
+        # the unsafe in-place index appends and the per-family copies of
+        # the commit protocol, now sources/commit.py
+        ("palegislature_spark.operators.similarity", "ivf_append"),
+        ("palegislature_spark.operators.dedup", "append_minhash_index"),
+        ("palegislature_spark.operators.similarity", "_promote_folded"),
+        ("palegislature_spark.streaming.jobs", "_promote_swap"),
+        ("palegislature_spark.streaming.jobs", "_recover_interrupted_swap"),
+        ("palegislature_spark.operators.similarity", "_ivf_folded_high_water"),
+        ("palegislature_spark.operators.dedup", "_folded_high_water"),
+        ("palegislature_spark.operators.dedup", "_committed_delta_ids"),
+        ("palegislature_spark.operators.similarity", "_ivf_committed_delta_ids"),
+        ("palegislature_spark.operators.pq", "_pq_committed_delta_ids"),
+        ("palegislature_spark.streaming.jobs", "_unfolded_minhash_deltas"),
+        ("palegislature_spark.streaming.jobs", "_unfolded_ivf_deltas"),
     ],
 )
 def test_deleted_kernels_stay_deleted(module, name):
     assert not hasattr(importlib.import_module(module), name)
+
+
+def test_embedding_drift_has_no_assign_switch():
+    from palegislature_spark.operators.audit import embedding_drift
+
+    assert "assign_impl" not in inspect.signature(embedding_drift).parameters
+
+
+def test_storage_goes_through_the_commit_module():
+    """Operators and streaming sinks publish through
+    palegislature_spark.sources.commit; none calls the raw Hadoop
+    rename/create/delete/listStatus itself."""
+    root = pathlib.Path(operators_pkg.__file__).parents[1]
+    raw = re.compile(r"fs\.(rename|create|delete|listStatus)\b")
+    offenders = [
+        f"{path.relative_to(root)}:{n}"
+        for sub in ("operators", "streaming")
+        for path in sorted((root / sub).rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if raw.search(line)
+    ]
+    assert offenders == []

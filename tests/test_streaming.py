@@ -1005,54 +1005,72 @@ def test_ivf_index_stream_lifecycle(spark, tmp_path):
     assert got() == want
 
 
-def test_ivf_reader_self_heals_interrupted_compact_swap(spark, tmp_path):
-    """ADVICE r11: a crash in compact_ivf_index between renaming live
-    aside and promoting staging leaves assignments/ missing.  Readers
-    (load_ivf_index) and the streaming append (ivf_append_delta) must
-    self-heal via _recover_interrupted_swap instead of raising — and
-    crucially the healed _FOLDED high-water must keep replayed,
-    already-folded batch ids as no-ops (with assignments/ missing the
-    high-water would read -1 and a replay would re-commit)."""
+def _swap_family(live):
+    """(save, append, compact, load, marker prefix, delta-dir prefix)
+    of an index family whose compaction folds by the staging swap:
+    IVF ``assignments/`` or PQ ``codes/``."""
+    from palegislature_spark.operators import pq, similarity
+
+    if live == "assignments":
+        return (
+            lambda df, idx: similarity.save_ivf_index(
+                df, idx, n_lists=4, refine_iters=1
+            ),
+            similarity.ivf_append_delta,
+            similarity.compact_ivf_index,
+            similarity.load_ivf_index,
+            "_IVFDELTA-",
+            "delta-",
+        )
+    return (
+        lambda df, idx: pq.save_pq_index(df, idx, m=4, k=8),
+        pq.pq_encode_delta,
+        pq.compact_pq_codes,
+        pq.load_pq_index,
+        "_PQDELTA-",
+        "codes-delta-",
+    )
+
+
+@pytest.mark.parametrize("live", ["assignments", "codes"])
+def test_index_reader_self_heals_interrupted_compact_swap(spark, tmp_path, live):
+    """ADVICE r11: a crash in a swap compaction (compact_ivf_index,
+    compact_pq_codes) between renaming live aside and promoting
+    staging leaves the live dataset missing.  Readers (load_ivf_index,
+    load_pq_index) and the streaming appends (ivf_append_delta,
+    pq_encode_delta) must self-heal via the swap recovery instead of
+    raising — and crucially the healed _FOLDED high-water must keep
+    replayed, already-folded batch ids as no-ops (with the dataset
+    missing the high-water would read -1 and a replay would
+    re-commit)."""
     import os
     import shutil
 
-    from palegislature_spark.operators.similarity import (
-        compact_ivf_index,
-        ivf_append_delta,
-        load_ivf_index,
-        save_ivf_index,
-    )
-
+    save, append, compact, load, _, delta = _swap_family(live)
     schema = "vec_id long, embedding array<double>"
     vecs = [(i, [float((i * 7 + j) % 13) for j in range(8)]) for i in range(30)]
     idx = str(tmp_path / "ivf_heal")
-    save_ivf_index(
-        spark.createDataFrame(vecs, schema), idx, n_lists=4, refine_iters=1
-    )
+    save(spark.createDataFrame(vecs, schema), idx)
     batch = [(100, [1.0] * 8), (101, [2.0] * 8)]
-    assert ivf_append_delta(
-        spark, idx, spark.createDataFrame(batch, schema), 0
-    )
-    compact_ivf_index(spark, idx)
+    assert append(spark, idx, spark.createDataFrame(batch, schema), 0)
+    compact(spark, idx)
 
     def rows():
-        _, a = load_ivf_index(spark, idx)
+        _, a = load(spark, idx)
         return sorted(r.vec_id for r in a.collect())
 
     want = sorted([v[0] for v in vecs] + [100, 101])
     assert rows() == want
-    assign = idx + "/assignments"
+    assign = f"{idx}/{live}"
 
     # crash state 1: live renamed aside, staging never promoted
     os.rename(assign, assign + ".__old__")
     assert rows() == want  # reader healed from .__old__
     # replay of the folded batch 0 against the healed index: no-op
     os.rename(assign, assign + ".__old__")
-    assert not ivf_append_delta(
-        spark, idx, spark.createDataFrame(batch, schema), 0
-    )
+    assert not append(spark, idx, spark.createDataFrame(batch, schema), 0)
     assert rows() == want
-    assert not [f for f in os.listdir(idx) if f.startswith("delta-")]
+    assert not [f for f in os.listdir(idx) if f.startswith(delta)]
 
     # crash state 2: staging fully committed (_SUCCESS), live missing
     shutil.copytree(assign, assign + ".__staging__")
@@ -1060,52 +1078,41 @@ def test_ivf_reader_self_heals_interrupted_compact_swap(spark, tmp_path):
     assert rows() == want  # reader promoted the committed staging
 
 
-def test_ivf_compact_gc_clears_stale_folded_deltas(spark, tmp_path):
-    """ADVICE r11: a crash between a compact's promote and its GC
-    loop leaves folded deltas at/below the _FOLDED high-water.  They
-    are invisible to readers, but a later compact must garbage-collect
-    them (GC keys on the promoted high-water, not just the delta ids
-    folded in that pass)."""
+@pytest.mark.parametrize("live", ["assignments", "codes"])
+def test_index_compact_gc_clears_stale_folded_deltas(spark, tmp_path, live):
+    """ADVICE r11: a crash between a swap compaction's promote and its
+    GC loop leaves folded deltas at/below the _FOLDED high-water.
+    They are invisible to readers, but a later compact must
+    garbage-collect them (GC keys on the promoted high-water, not just
+    the delta ids folded in that pass)."""
     import os
     import shutil
 
-    from palegislature_spark.operators.similarity import (
-        compact_ivf_index,
-        ivf_append_delta,
-        load_ivf_index,
-        save_ivf_index,
-    )
-
+    save, append, compact, load, marker, delta = _swap_family(live)
     schema = "vec_id long, embedding array<double>"
     vecs = [(i, [float((i * 5 + j) % 11) for j in range(8)]) for i in range(30)]
     idx = str(tmp_path / "ivf_gc")
-    save_ivf_index(
-        spark.createDataFrame(vecs, schema), idx, n_lists=4, refine_iters=1
-    )
-    assert ivf_append_delta(
-        spark, idx, spark.createDataFrame([(100, [1.0] * 8)], schema), 0
-    )
+    save(spark.createDataFrame(vecs, schema), idx)
+    assert append(spark, idx, spark.createDataFrame([(100, [1.0] * 8)], schema), 0)
     # snapshot the committed delta, then compact (folds + GCs it)
-    shutil.copytree(idx + "/delta-000000", str(tmp_path / "d0"))
-    compact_ivf_index(spark, idx)
+    shutil.copytree(f"{idx}/{delta}000000", str(tmp_path / "d0"))
+    compact(spark, idx)
     # simulate crash-before-GC: the folded delta + marker reappear
-    shutil.copytree(str(tmp_path / "d0"), idx + "/delta-000000")
-    open(idx + "/_IVFDELTA-000000", "w").close()
+    shutil.copytree(str(tmp_path / "d0"), f"{idx}/{delta}000000")
+    open(f"{idx}/{marker}000000", "w").close()
 
     def rows():
-        _, a = load_ivf_index(spark, idx)
+        _, a = load(spark, idx)
         return sorted(r.vec_id for r in a.collect())
 
     want = sorted([v[0] for v in vecs] + [100, 101])
     assert rows() == want[:-1]  # stale folded delta invisible
 
     # next maintenance pass folds a NEW delta and must GC the stale one
-    assert ivf_append_delta(
-        spark, idx, spark.createDataFrame([(101, [2.0] * 8)], schema), 1
-    )
-    compact_ivf_index(spark, idx)
+    assert append(spark, idx, spark.createDataFrame([(101, [2.0] * 8)], schema), 1)
+    compact(spark, idx)
     assert rows() == want
-    left = [f for f in os.listdir(idx) if "DELTA" in f or f.startswith("delta-")]
+    left = [f for f in os.listdir(idx) if "DELTA" in f or delta in f]
     assert left == [], f"stale folded delta survived GC: {left}"
 
 
@@ -1344,7 +1351,7 @@ def test_index_streams_auto_compact_past_max_deltas(spark, tmp_path):
         load_ivf_index,
         save_ivf_index,
     )
-    from palegislature_spark.streaming.jobs import _unfolded_ivf_deltas
+    from palegislature_spark.sources.commit import IVF_DELTAS, hadoop_fs
 
     def vec(i, shift):
         return (i, [float((i * 7 + j) % 13) / 13.0 + shift for j in range(8)])
@@ -1373,7 +1380,8 @@ def test_index_streams_auto_compact_past_max_deltas(spark, tmp_path):
         drain(q)
 
     # the reader's union width stayed bounded by the threshold
-    assert _unfolded_ivf_deltas(spark, idx) <= 1
+    fs, HPath = hadoop_fs(spark, idx)
+    assert len(IVF_DELTAS.unfolded(fs, HPath, idx, idx + "/assignments")[1]) <= 1
     n_dirs = [f for f in os.listdir(idx) if f.startswith("delta-")]
     assert len(n_dirs) <= 1
     # and the state equals the unbounded composition
