@@ -12,6 +12,8 @@ as a single built-in) re-expressed as DataFrame compositions:
     sampling    — deterministic hash splits / stratified downsampling
     quantize    — symmetric int8 embedding quantization
     multimodal  — image/audio/video decode seams over binary columns
+    kernels     — the one Arrow-kernel seam (mapInPandas) Python kernels
+                  run through: projection, fan-out gate, bounded memo
     er          — blocked fuzzy entity resolution (match_names.py shape)
     merge       — merge-by-key batch writes (the metro_db upsert analogue)
 """

@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from palegislature_spark.operators.kernels import TaskMemo, map_batches
+
 MERGE_SCHEMA = T.StructType(
     [
         T.StructField("step", T.LongType()),
@@ -222,10 +224,11 @@ def apply_bpe(
     (id, tokens array) after replaying every merge in step order.
 
     The merge table is model-sized — collected once.  Encoding is one
-    shuffle-free mapInPandas pass with a per-task word -> tokens memo
-    (guide §4.5 heavyweight-init; a corpus repeats its vocabulary, so
-    each DISTINCT word in a task is encoded once).  A word is encoded
-    by the boundary-wrapped replace chain the DuckDB oracle runs —
+    shuffle-free Arrow-kernel pass with a bounded per-task word ->
+    tokens memo (``kernels.TaskMemo``; guide §4.5 heavyweight-init; a
+    corpus repeats its vocabulary, so each DISTINCT word in a task is
+    encoded once, up to the memo cap).  A word is encoded by the
+    boundary-wrapped replace chain the DuckDB oracle runs —
     Python ``str.replace`` is left-to-right non-overlapping exactly
     like Java's/DuckDB's — and words containing the \\x01/\\x02
     delimiters take the per-symbol left fold instead.  The token
@@ -233,8 +236,6 @@ def apply_bpe(
     document's word order.  The expression twin, ``apply_bpe_expr`` in
     tests/reference_impls.py, pins bit-equality (tests/test_bpe.py)."""
     import re
-
-    import pandas as pd
 
     rules = [
         (r["left_sym"], r["right_sym"])
@@ -248,48 +249,39 @@ def apply_bpe(
     )
     sym_pat = re.compile(_SYM_PAT)
 
-    def encode_word(w: str, memo: dict) -> list:
-        toks = memo.get(w)
-        if toks is None:
-            if "\x01" in w or "\x02" in w:
-                # delimiter collision: per-rule left fold over the
-                # symbol array
-                syms = list(w)
-                for a, b in rules:
-                    merged = a + b
-                    out: list = []
-                    for s in syms:
-                        if out and out[-1] == a and s == b:
-                            out[-1] = merged
-                        else:
-                            out.append(s)
-                    syms = out
-                toks = syms
-            else:
-                s = "".join(f"\x01{c}\x02" for c in w)
-                for a, b in rules:
-                    s = s.replace(
-                        f"\x01{a}\x02\x01{b}\x02", f"\x01{a + b}\x02"
-                    )
-                toks = sym_pat.findall(s)
-            memo[w] = toks
-        return toks
+    def encode_word(w: str) -> list:
+        if "\x01" in w or "\x02" in w:
+            # delimiter collision: per-rule left fold over the symbol
+            # array
+            syms = list(w)
+            for a, b in rules:
+                merged = a + b
+                out: list = []
+                for s in syms:
+                    if out and out[-1] == a and s == b:
+                        out[-1] = merged
+                    else:
+                        out.append(s)
+                syms = out
+            return syms
+        s = "".join(f"\x01{c}\x02" for c in w)
+        for a, b in rules:
+            s = s.replace(f"\x01{a}\x02\x01{b}\x02", f"\x01{a + b}\x02")
+        return sym_pat.findall(s)
 
-    def gen(batches):
-        memo: dict = {}
-        for pdf in batches:
-            ids, toks_col = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                toks: list = []
-                if isinstance(text, str):
-                    for w in text.split(" "):
-                        if w:
-                            toks.extend(encode_word(w, memo))
-                ids.append(did)
-                toks_col.append(toks)
-            yield pd.DataFrame({id_col: ids, "tokens": toks_col})
+    def batch(pdf, memo):
+        toks_col = []
+        for text in pdf[text_col]:
+            toks: list = []
+            if isinstance(text, str):
+                for w in text.split(" "):
+                    if w:
+                        toks.extend(memo.get(w, encode_word))
+            toks_col.append(toks)
+        return {id_col: pdf[id_col], "tokens": toks_col}
 
-    from palegislature_spark.operators.multimodal import _fan_out
-
-    return _fan_out(docs, id_col, text_col).mapInPandas(gen, out_schema)
+    return map_batches(
+        docs, (id_col, text_col), out_schema, batch, setup=TaskMemo,
+        fan_out_by=id_col,
+    )
 

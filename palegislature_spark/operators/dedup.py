@@ -33,6 +33,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from palegislature_spark.operators.kernels import TaskMemo, map_batches
 from palegislature_spark.sources.commit import (
     MINHASH_DELTAS,
     commit_generation,
@@ -221,34 +222,32 @@ def winnow_fingerprints(
         ]
     )
 
-    def gen(batches):
-        import pandas as pd
+    def batch(pdf):
         from numpy.lib.stride_tricks import sliding_window_view
 
-        for pdf in batches:
-            ids, fps = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                # NULL/short text: drop the row, matching the
-                # expression twin's length(text) >= k filter
-                if not isinstance(text, str) or len(text) < k:
-                    continue
-                # utf-32-le decode = exact codepoints, matching F.ascii
-                codes = np.frombuffer(
-                    text.encode("utf-32-le"), dtype=np.uint32
-                ).astype(np.int64)
-                grams = sliding_window_view(codes, k) @ pow_row
-                if grams.size < w:
-                    continue
-                u = np.unique(sliding_window_view(grams, w).min(axis=1))
-                ids.extend([did] * len(u))
-                fps.extend(u.tolist())
-            yield pd.DataFrame({id_col: ids, "fingerprint": fps})
+        ids, fps = [], []
+        for did, text in zip(pdf[id_col], pdf[text_col]):
+            # NULL/short text: drop the row, matching the expression
+            # twin's length(text) >= k filter
+            if not isinstance(text, str) or len(text) < k:
+                continue
+            # utf-32-le decode = exact codepoints, matching F.ascii
+            codes = np.frombuffer(
+                text.encode("utf-32-le"), dtype=np.uint32
+            ).astype(np.int64)
+            grams = sliding_window_view(codes, k) @ pow_row
+            if grams.size < w:
+                continue
+            u = np.unique(sliding_window_view(grams, w).min(axis=1))
+            ids.extend([did] * len(u))
+            fps.extend(u.tolist())
+        return {id_col: ids, "fingerprint": fps}
 
-    # no _fan_out here (unlike the heavier simhash/BPE kernels): the
+    # no fan-out here (unlike the heavier simhash/BPE kernels): the
     # winnow kernel is ~0.5s single-worker at sf0.1, so the fan-out
     # repartition costs more than it parallelizes (measured 0.75s vs
     # 0.85s), and at replica scale the scan is already parallel
-    return df.select(id_col, text_col).mapInPandas(gen, out_schema)
+    return map_batches(df, (id_col, text_col), out_schema, batch)
 
 
 # --------------------------------------------------------------------------
@@ -287,8 +286,8 @@ def _verify_pairs_by_array(
     common) — the same integer counts (hence bit-identical division)
     as the inverted-index ``_pair_jaccard`` path, at O(candidates)
     join work instead of a chain of candidate-bounded shuffles.
-    Pairs with no shared shingle fall out at any threshold > 0, like
-    the inverted index (which never emits them)."""
+    Pairs with no shared shingle never emit, at any threshold (even
+    <= 0), like the inverted index (which never emits them)."""
     j = (
         cand.join(
             sharr.select(F.col(id_col).alias("id_1"), F.col("sha").alias("__a1")),
@@ -306,7 +305,7 @@ def _verify_pairs_by_array(
             F.size("__a2").alias("__n2"),
         )
     )
-    return j.select(
+    return j.filter(F.col("__common") > 0).select(
         "id_1",
         "id_2",
         (
@@ -452,11 +451,11 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     nibbles => 60 bits, fits a BIGINT). md5 is used (not xxhash64) so
     external engines can reproduce the signature exactly.
 
-    One shuffle-free mapInPandas pass — per-task token->md5 memo
-    (Zipf: tokens repeat corpus-wide, guide §4.5), numpy bit
-    extraction and vote sums — emitting one (id, simhash) row per
-    document with zero exchanges, so the signature stage is a pure map
-    over the corpus scan.  NULL-text rows drop.  The expression twin
+    One shuffle-free Arrow-kernel pass — bounded per-task token->md5
+    memo (``kernels.TaskMemo``; Zipf: tokens repeat corpus-wide, guide
+    §4.5), numpy bit extraction and vote sums — emitting one (id,
+    simhash) row per document with zero exchanges, so the signature
+    stage is a pure map over the corpus scan.  NULL-text rows drop.  The expression twin
     the DuckDB oracle structurally mirrors (token explode + 60
     integer-shift partial sums in one groupBy) is
     ``simhash_signatures_expr`` in tests/reference_impls.py; the two
@@ -477,37 +476,30 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
     bit_vals = np.uint64(1) << np.arange(_SIMHASH_BITS, dtype=np.uint64)
 
-    def gen(batches):
+    def md5_60(w: str) -> int:
         import hashlib
 
-        import pandas as pd
+        return int(hashlib.md5(w.encode("utf-8")).hexdigest()[:15], 16)
 
-        memo: dict = {}
-        for pdf in batches:
-            ids, sigs = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                if not isinstance(text, str):
-                    continue
-                toks = text.split(" ")
-                vals = np.empty(len(toks), dtype=np.uint64)
-                for j, w in enumerate(toks):
-                    v = memo.get(w)
-                    if v is None:
-                        v = int(
-                            hashlib.md5(w.encode("utf-8")).hexdigest()[:15],
-                            16,
-                        )
-                        memo[w] = v
-                    vals[j] = v
-                bits = (vals[:, None] >> shifts) & np.uint64(1)
-                votes = 2 * bits.astype(np.int64).sum(axis=0) - len(toks)
-                sigs.append(int(bit_vals[votes > 0].sum()))
-                ids.append(did)
-            yield pd.DataFrame({id_col: ids, "simhash": sigs})
+    def batch(pdf, memo):
+        ids, sigs = [], []
+        for did, text in zip(pdf[id_col], pdf[text_col]):
+            if not isinstance(text, str):
+                continue
+            toks = text.split(" ")
+            vals = np.empty(len(toks), dtype=np.uint64)
+            for j, w in enumerate(toks):
+                vals[j] = memo.get(w, md5_60)
+            bits = (vals[:, None] >> shifts) & np.uint64(1)
+            votes = 2 * bits.astype(np.int64).sum(axis=0) - len(toks)
+            sigs.append(int(bit_vals[votes > 0].sum()))
+            ids.append(did)
+        return {id_col: ids, "simhash": sigs}
 
-    from palegislature_spark.operators.multimodal import _fan_out
-
-    return _fan_out(df, id_col, text_col).mapInPandas(gen, out_schema)
+    return map_batches(
+        df, (id_col, text_col), out_schema, batch, setup=TaskMemo,
+        fan_out_by=id_col,
+    )
 
 
 def simhash_pairs(
@@ -552,7 +544,11 @@ def simhash_pairs(
       BASELINE.md "SimHash banding rungs"); one count() action to
       size it, same policy as ivf_assignments(n_lists=None) — pass
       ``n_docs`` to skip the count when the cardinality is already
-      known (semantic_dedup's n_vectors precedent).
+      known (semantic_dedup's n_vectors precedent).  ``n_docs`` may
+      be an upper bound on the signature rows (a metadata count that
+      includes NULL-text rows, which the signature pass drops): an
+      over-estimate only moves the rung choice, i.e. cost, never the
+      output, which is band-invariant.
 
     ``band_chunks`` must satisfy ``band_chunks + max_hamming <= 60``
     (every chunk needs at least one bit).

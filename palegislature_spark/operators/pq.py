@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from palegislature_spark.operators.kernels import map_batches
 from palegislature_spark.operators.similarity import (
     _as_double,
     _dot,
@@ -205,35 +206,27 @@ def pq_encode(
     )
     C = [np.asarray(sub, dtype=np.float64) for sub in nested]  # [m](k, sd)
 
-    def gen(batches):
-        import pandas as pd
+    def batch(pdf):
+        V = np.array(pdf["__v"].tolist(), dtype=np.float64)
+        sd = V.shape[1] // m
+        cols = []
+        for j in range(m):
+            sv = V[:, j * sd : (j + 1) * sd]
+            k = C[j].shape[0]
+            dists = np.empty((len(V), k), dtype=np.float64)
+            for c in range(k):
+                acc = np.zeros(len(V), dtype=np.float64)
+                cvec = C[j][c]
+                # dimension-SEQUENTIAL accumulation: identical rounding
+                # order to the expression fold
+                for i in range(sd):
+                    t = sv[:, i] - cvec[i]
+                    acc += t * t
+                dists[:, c] = acc
+            cols.append((np.argmin(dists, axis=1) + 1).astype("int32"))
+        return {id_col: pdf[id_col], "codes": list(np.stack(cols, axis=1))}
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array(pdf["__v"].tolist(), dtype=np.float64)
-            sd = V.shape[1] // m
-            cols = []
-            for j in range(m):
-                sv = V[:, j * sd : (j + 1) * sd]
-                k = C[j].shape[0]
-                dists = np.empty((len(V), k), dtype=np.float64)
-                for c in range(k):
-                    acc = np.zeros(len(V), dtype=np.float64)
-                    cvec = C[j][c]
-                    # dimension-SEQUENTIAL accumulation: identical
-                    # rounding order to the expression fold
-                    for i in range(sd):
-                        t = sv[:, i] - cvec[i]
-                        acc += t * t
-                    dists[:, c] = acc
-                cols.append((np.argmin(dists, axis=1) + 1).astype("int32"))
-            codes = np.stack(cols, axis=1)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "codes": list(codes)}
-            )
-
-    return src.mapInPandas(gen, out_schema)
+    return map_batches(src, (id_col, "__v"), out_schema, batch)
 
 
 def pq_adc_topk(

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from palegislature_spark.operators.kernels import map_batches
 from palegislature_spark.sources.commit import IVF_DELTAS, hadoop_fs, recover_swap
 
 
@@ -41,6 +42,41 @@ def _norm(a):
     return F.sqrt(
         F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x)
     )
+
+
+def _seq_norms(V):
+    """Row L2 norms of a float64 matrix, accumulated dimension-
+    SEQUENTIALLY (``acc += x_i * x_i``, one rounding per step): the same
+    IEEE left fold as :func:`_norm`, vectorized across rows."""
+    import numpy as np
+
+    acc = np.zeros(len(V), dtype=np.float64)
+    for i in range(V.shape[1]):
+        acc += V[:, i] * V[:, i]
+    return np.sqrt(acc)
+
+
+def _seq_cosines(V, M, m_norms):
+    """Cosine of every row of ``V`` against every row of ``M`` (whose
+    norms are ``m_norms``): the one scoring kernel of
+    :func:`cosine_pairs` and :func:`_assign_exact_arrow`.
+
+    BIT-IDENTICAL to the expression ``_dot(v, m) / (norm(v) * norm(m))``
+    (the multimodal-codec discipline — same IEEE ops in the same order,
+    vectorized ACROSS rows instead of down them): dot and norm
+    accumulate dimension-sequentially (``acc += v_i * m_i``, one
+    rounding per step, exactly the HOF left fold), and the cosine is the
+    same single product-then-divide (IEEE multiply is commutative, so
+    the denominator's operand order is free).  A BLAS matmul would
+    re-associate the sum; that is the ``assign_arrow`` kernel, which is
+    not exact.  Zero norms yield inf/NaN as the expression does."""
+    import numpy as np
+
+    S = np.zeros((len(V), len(M)), dtype=np.float64)
+    for i in range(V.shape[1]):
+        S += V[:, i][:, None] * M[None, :, i]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return S / (_seq_norms(V)[:, None] * m_norms[None, :])
 
 
 def with_norm(df: DataFrame, vec_col: str, out: str = "norm") -> DataFrame:
@@ -64,13 +100,10 @@ def cosine_pairs(
     different ids; downstream consumers group or rank, so pair order
     is free.  The cosines are BIT-IDENTICAL to the broadcast-join
     expression (``cosine_pairs_expr`` in tests/reference_impls.py,
-    pinned in tests/test_similarity.py) by the codec-kernel argument
-    (`_assign_exact_arrow` docstring): dot and norm accumulate
-    dimension-sequentially (one rounding per step, the same IEEE left
-    fold), the denominator is the same product-then-divide, and the
-    panel's own norms are collected FROM the expression plan, not
-    recomputed.  The expression's per-pair HOF fold never enters
-    codegen, which is why the kernel is the one path.
+    pinned in tests/test_similarity.py) by the :func:`_seq_cosines`
+    argument, and the panel's own norms are collected FROM the
+    expression plan, not recomputed.  The expression's per-pair HOF
+    fold never enters codegen, which is why the kernel is the one path.
     """
     import numpy as np
     from pyspark.sql import types as T
@@ -80,11 +113,7 @@ def cosine_pairs(
     ).withColumn("__qn", _norm(F.col("__qv")))
     rows = l.collect()
     qids = [row["__qid"] for row in rows]
-    Q = (
-        np.array([list(row["__qv"]) for row in rows], dtype=np.float64)
-        if rows
-        else np.zeros((0, 0))
-    )
+    Q = np.array([list(row["__qv"]) for row in rows], dtype=np.float64)
     qn = np.array([row["__qn"] for row in rows], dtype=np.float64)
     n_q = len(rows)
 
@@ -99,38 +128,24 @@ def cosine_pairs(
         ]
     )
 
-    def gen(batches):
-        import pandas as pd
+    def batch(pdf):
+        if not n_q:
+            return {id_left: [], id_right: [], "cosine": []}
+        S = _seq_cosines(np.array(pdf["__cv"].tolist(), dtype=np.float64), Q, qn)
+        cids = pdf["__cid"].to_numpy()
+        out_q, out_c, out_s = [], [], []
+        for j, qid in enumerate(qids):
+            mask = cids != qid
+            out_q.append(np.full(int(mask.sum()), qid))
+            out_c.append(cids[mask])
+            out_s.append(S[mask, j])
+        return {
+            id_left: np.concatenate(out_q),
+            id_right: np.concatenate(out_c),
+            "cosine": np.concatenate(out_s),
+        }
 
-        for pdf in batches:
-            if not len(pdf) or not n_q:
-                continue
-            V = np.array(pdf["__cv"].tolist(), dtype=np.float64)
-            vn = np.zeros(len(V), dtype=np.float64)
-            S = np.zeros((len(V), n_q), dtype=np.float64)
-            for i in range(V.shape[1]):
-                vi = V[:, i]
-                vn += vi * vi
-                S += vi[:, None] * Q[None, :, i]
-            vn = np.sqrt(vn)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                S = S / (qn[None, :] * vn[:, None])
-            cids = pdf["__cid"].to_numpy()
-            out_q, out_c, out_s = [], [], []
-            for j, qid in enumerate(qids):
-                mask = cids != qid
-                out_q.append(np.full(int(mask.sum()), qid))
-                out_c.append(cids[mask])
-                out_s.append(S[mask, j])
-            yield pd.DataFrame(
-                {
-                    id_left: np.concatenate(out_q),
-                    id_right: np.concatenate(out_c),
-                    "cosine": np.concatenate(out_s),
-                }
-            )
-
-    return r_src.mapInPandas(gen, out_schema)
+    return map_batches(r_src, ("__cid", "__cv"), out_schema, batch)
 
 
 def _band_keys_udf(n_bands: int, band_bits: int):
@@ -505,6 +520,20 @@ def _hyperplane_sign_bits(vec_col, dim: int, n_planes: int):
     return bucket
 
 
+def _centroid_panel(cents: DataFrame):
+    """The collected centroid table as (list_ids, float64 matrix),
+    sorted by list_id so that an argmax tie goes to the smallest
+    list_id, as the expression's ``ORDER BY cos DESC, list_id`` does."""
+    import numpy as np
+
+    rows = sorted(
+        cents.select("list_id", "centroid").collect(),
+        key=lambda r: r["list_id"],
+    )
+    C = np.array([list(r["centroid"]) for r in rows], dtype=np.float64)
+    return [r["list_id"] for r in rows], C
+
+
 def _assign_exact_arrow(
     cents: DataFrame,
     src: DataFrame,
@@ -518,15 +547,12 @@ def _assign_exact_arrow(
     DESC, list_id``), unlike the BLAS ``assign_arrow`` kernel whose
     matmul re-associates the sum.
 
-    Exactness argument (the multimodal-codec discipline — same IEEE
-    ops in the same order, vectorized ACROSS rows instead of down
-    them):  dot and norm accumulate dimension-SEQUENTIALLY
-    (``acc += v_i * c_i`` / ``acc += x_i * x_i``, one rounding per
-    step, exactly the HOF left fold); the cosine is the same single
-    product-then-divide; ``np.argmax`` ties to the first maximum =
-    smallest ``list_id`` (rows sorted), and NaN propagates to "first
-    NaN wins" on both sides (Spark sorts NaN greatest, numpy argmax
-    returns the first NaN).  Equality is pinned in tests/test_ivf.py.
+    Exactness argument: the cosines are :func:`_seq_cosines` (the
+    centroid norms by the same sequential fold, :func:`_seq_norms`);
+    ``np.argmax`` ties to the first maximum = smallest ``list_id`` (rows
+    sorted), and NaN propagates to "first NaN wins" on both sides (Spark
+    sorts NaN greatest, numpy argmax returns the first NaN).  Equality
+    is pinned in tests/test_ivf.py.
 
     ``src`` must be ``(id_name, vec_name)`` with the vector already
     cast to ``array<double>``; output is ``(out_id, list_id,
@@ -537,61 +563,31 @@ def _assign_exact_arrow(
     import numpy as np
     from pyspark.sql import types as T
 
-    rows = sorted(
-        cents.select("list_id", "centroid").collect(),
-        key=lambda r: r["list_id"],
+    ids, C = _centroid_panel(cents)
+    list_type = cents.schema["list_id"].dataType
+    list_ids = np.array(
+        ids, dtype="int32" if isinstance(list_type, T.IntegerType) else "int64"
     )
-    np_list_dtype = "int64"
-    for f in cents.schema.fields:
-        if f.name == "list_id" and isinstance(f.dataType, T.IntegerType):
-            np_list_dtype = "int32"
-    list_ids = np.array([r["list_id"] for r in rows], dtype=np_list_dtype)
-    C = np.array([list(r["centroid"]) for r in rows], dtype=np.float64)
-    n_c, dim = (C.shape[0], C.shape[1]) if C.ndim == 2 and len(rows) else (0, 0)
-    cn = np.zeros(n_c, dtype=np.float64)
-    for i in range(dim):
-        cn += C[:, i] * C[:, i]
-    cn = np.sqrt(cn)
+    cn = _seq_norms(C) if C.ndim == 2 else np.zeros(0, dtype=np.float64)
 
     out_schema = T.StructType(
         [
             T.StructField(out_id, src.schema[id_name].dataType),
-            T.StructField(
-                "list_id",
-                cents.schema["list_id"].dataType
-                if "list_id" in cents.columns
-                else T.IntegerType(),
-            ),
+            T.StructField("list_id", list_type),
             T.StructField(out_vec, src.schema[vec_name].dataType),
         ]
     )
 
-    def gen(batches):
-        import pandas as pd
+    def batch(pdf):
+        V = np.array(pdf[vec_name].tolist(), dtype=np.float64)
+        best = np.argmax(_seq_cosines(V, C, cn), axis=1)
+        return {
+            out_id: pdf[id_name],
+            "list_id": list_ids[best],
+            out_vec: pdf[vec_name],
+        }
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array(pdf[vec_name].tolist(), dtype=np.float64)
-            vn = np.zeros(len(V), dtype=np.float64)
-            S = np.zeros((len(V), n_c), dtype=np.float64)
-            for i in range(V.shape[1]):
-                vi = V[:, i]
-                vn += vi * vi
-                S += vi[:, None] * C[None, :, i]
-            vn = np.sqrt(vn)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                S = S / (vn[:, None] * cn[None, :])
-            best = np.argmax(S, axis=1)
-            yield pd.DataFrame(
-                {
-                    out_id: pdf[id_name],
-                    "list_id": list_ids[best],
-                    out_vec: pdf[vec_name],
-                }
-            )
-
-    return src.mapInPandas(gen, out_schema)
+    return map_batches(src, (id_name, vec_name), out_schema, batch)
 
 
 def ivf_assignments(
@@ -634,11 +630,19 @@ def ivf_assignments(
       list into one row — correct and deliberately used ONLY by the
       sf0.01-scale ``knn_ivf`` oracle query, never the operator default.
 
-    Every assignment pass broadcasts the tiny centroid set — linear
-    passes, no shuffle beyond the grouping.  Lists emptied by a
-    re-assignment drop out of both paths, matching the SQL replay's
-    GROUP BY.
+    Two assignment kernels (``assign_impl``): ``"arrow_exact"`` (the
+    default) is bit-identical to the expression twin
+    (:func:`_assign_exact_arrow`); ``"arrow"`` scores with one BLAS
+    matmul per batch, faster on large builds but last-ulp inexact
+    (semantic_dedup's 1e5-vector gate selects it).  Every assignment
+    pass collects the tiny centroid set into the kernel — linear passes,
+    no shuffle beyond the grouping.  Lists emptied by a re-assignment
+    drop out of both mean paths, matching the SQL replay's GROUP BY.
     """
+    if assign_impl not in ("arrow", "arrow_exact"):
+        raise ValueError(
+            f"assign_impl must be 'arrow' or 'arrow_exact', not {assign_impl!r}"
+        )
     if n_lists is None:
         import math
 
@@ -665,24 +669,7 @@ def ivf_assignments(
     )
     vecs = embeddings.select(
         F.col(id_col).alias("__id"), _as_double(vec_col).alias("__v")
-    ).withColumn("__n", _norm(F.col("__v")))
-
-    def assign(cents: DataFrame) -> DataFrame:
-        scored = vecs.join(F.broadcast(cents)).select(
-            "__id",
-            "__v",
-            "list_id",
-            (
-                _dot(F.col("__v"), F.col("centroid"))
-                / (F.col("__n") * F.col("__cn"))
-            ).alias("__cos"),
-        )
-        w = Window.partitionBy("__id").orderBy(F.col("__cos").desc(), "list_id")
-        return (
-            scored.withColumn("__r", F.row_number().over(w))
-            .filter("__r = 1")
-            .select("__id", "list_id", "__v")
-        )
+    )
 
     def assign_arrow(cents: DataFrame) -> DataFrame:
         """Vectorized assignment: one BLAS matmul per Arrow batch
@@ -692,19 +679,14 @@ def ivf_assignments(
         numpy turns each score into a fused multiply-add: the 200k x
         447-list build drops from ~108s (expression) to seconds.
         Argmax tie-break = first max = smallest list_id (centroid rows
-        sorted), matching the expression path's ORDER BY cos DESC,
+        sorted), matching the expression twin's ORDER BY cos DESC,
         list_id; last-ulp cosine drift vs the fold-sum is possible, so
         the ORACLE-pinned queries use assign_impl='arrow_exact'."""
         import numpy as np
-        import pandas as pd
         from pyspark.sql import types as T
 
-        rows = sorted(
-            cents.select("list_id", "centroid").collect(),
-            key=lambda r: r["list_id"],
-        )
-        list_ids = np.array([r["list_id"] for r in rows], dtype=np.int64)
-        C = np.array([r["centroid"] for r in rows], dtype=np.float64)
+        ids, C = _centroid_panel(cents)
+        list_ids = np.array(ids, dtype=np.int32)
         Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
 
         out_schema = T.StructType(
@@ -715,23 +697,17 @@ def ivf_assignments(
             ]
         )
 
-        def gen(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.array(pdf["__v"].tolist(), dtype=np.float64)
-                nrm = np.linalg.norm(V, axis=1, keepdims=True)
-                S = (V @ Cn.T) / np.where(nrm == 0.0, 1.0, nrm)
-                best = np.argmax(S, axis=1)
-                yield pd.DataFrame(
-                    {
-                        "__id": pdf["__id"],
-                        "list_id": list_ids[best].astype("int32"),
-                        "__v": pdf["__v"],
-                    }
-                )
+        def batch(pdf):
+            V = np.array(pdf["__v"].tolist(), dtype=np.float64)
+            nrm = np.linalg.norm(V, axis=1, keepdims=True)
+            best = np.argmax((V @ Cn.T) / np.where(nrm == 0.0, 1.0, nrm), axis=1)
+            return {
+                "__id": pdf["__id"],
+                "list_id": list_ids[best],
+                "__v": pdf["__v"],
+            }
 
-        return vecs.select("__id", "__v").mapInPandas(gen, out_schema)
+        return map_batches(vecs, ("__id", "__v"), out_schema, batch)
 
     def list_means_exact(assigned: DataFrame) -> DataFrame:
         # Oracle twin: sequential id-ordered fold, bit-reproducible in
@@ -770,19 +746,14 @@ def ivf_assignments(
         )
 
     def assign_exact(cents: DataFrame) -> DataFrame:
-        # bit-identical Arrow kernel (module helper): same folds, same
-        # tie-break — the default since r12 (the expression path cost
-        # ~n * n_lists interpreted HOF dots; measured ~0.6 ms/row)
-        return _assign_exact_arrow(
-            cents, vecs.select("__id", "__v"), "__id", "__v", "__id", "__v"
-        )
+        # bit-identical Arrow kernel (module helper, resolved here at
+        # call time): same folds, same tie-break as the expression twin
+        # (assign_to_centroids_expr in tests/reference_impls.py, which
+        # cost ~n * n_lists interpreted HOF dots; measured ~0.6 ms/row)
+        return _assign_exact_arrow(cents, vecs, "__id", "__v", "__id", "__v")
 
     list_means = list_means_exact if exact_replay else list_means_scale
-    do_assign = {
-        "arrow": assign_arrow,
-        "expr": assign,
-        "arrow_exact": assign_exact,
-    }[assign_impl]
+    do_assign = assign_arrow if assign_impl == "arrow" else assign_exact
 
     assigned = do_assign(centroids)
     for _ in range(refine_iters):

@@ -26,12 +26,12 @@ from __future__ import annotations
 
 import json
 import re
-from collections.abc import Iterator
 from html.parser import HTMLParser
 from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import DataFrame
 
+from palegislature_spark.operators.kernels import map_batches
 from palegislature_spark.pipelines.ingest import FETCH_SCHEMA
 
 # --------------------------------------------------------------------------
@@ -389,27 +389,22 @@ def extract_pages(pages: DataFrame, page_type: str) -> DataFrame:
     payload replaced by the page type's JSON contract, ready for the
     ``pipelines/ingest.py`` from_json parse stages.
 
-    Runs as mapInPandas: Arrow-batched, executor-side, one Python
-    worker per input split — the legitimate Python seam (DOM parsing
-    has no Column-expression form).
+    Runs as an Arrow kernel (``operators/kernels.py``): Arrow-batched,
+    executor-side, one Python worker per input split — the legitimate
+    Python seam (DOM parsing has no Column-expression form).
     """
     if page_type not in _EXTRACTORS:
         raise ValueError(f"unknown page_type {page_type!r}; one of {sorted(_EXTRACTORS)}")
     extractor = _EXTRACTORS[page_type]
 
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def batch(pdf):
+        return {
+            "url": pdf["url"],
+            "payload": [
+                json.dumps(extractor(u, h))
+                for u, h in zip(pdf["url"], pdf["payload"])
+            ],
+            "fetched_at": pdf["fetched_at"],
+        }
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "payload": [
-                        json.dumps(extractor(u, h))
-                        for u, h in zip(pdf["url"], pdf["payload"])
-                    ],
-                    "fetched_at": pdf["fetched_at"],
-                }
-            )
-
-    return pages.mapInPandas(gen, FETCH_SCHEMA)
+    return map_batches(pages, FETCH_SCHEMA.fieldNames(), FETCH_SCHEMA, batch)

@@ -26,11 +26,13 @@ merge writes — is the production path.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from palegislature_spark.operators.kernels import map_batches
 
 FETCH_SCHEMA = T.StructType(
     [
@@ -160,27 +162,26 @@ def fetch_pages(
     """Partition-parallel fetch through an injected page source.
 
     ``page_source`` receives a batch of URLs and returns (url,
-    payload) pairs; it runs on executors inside mapInPandas, so it
-    must be picklable and self-contained (build sessions lazily).
+    payload) pairs; it runs on executors inside the Arrow kernel seam
+    (``operators/kernels.py``), so it must be picklable and
+    self-contained (build sessions lazily).  One fetch timestamp per
+    task.
     """
 
-    def gen(batches: Iterator) -> Iterator:
+    def task_now():
         import datetime as dt
 
-        import pandas as pd
+        return dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
 
-        now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-        for pdf in batches:
-            fetched = page_source(list(pdf[url_col]))
-            yield pd.DataFrame(
-                {
-                    "url": [u for u, _ in fetched],
-                    "payload": [p for _, p in fetched],
-                    "fetched_at": [now] * len(fetched),
-                }
-            )
+    def batch(pdf, now):
+        fetched = page_source(list(pdf[url_col]))
+        return {
+            "url": [u for u, _ in fetched],
+            "payload": [p for _, p in fetched],
+            "fetched_at": [now] * len(fetched),
+        }
 
-    return urls.select(url_col).mapInPandas(gen, FETCH_SCHEMA)
+    return map_batches(urls, (url_col,), FETCH_SCHEMA, batch, setup=task_now)
 
 
 def parse_session_pages(pages: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -132,7 +132,10 @@ def banded_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     # n_docs hint: a parquet metadata count, replacing the full
     # signature pass hamming_pairs would otherwise run just to size
-    # band_chunks (the media queries' n_rows idiom)
+    # band_chunks (the media queries' n_rows idiom).  It counts NULL-text
+    # rows the signature pass drops, so it is an upper bound; an
+    # over-estimate changes cost only (the pairs are band-invariant),
+    # and a filtered count would add a scan.
     return dedup.simhash_pairs(
         docs, "doc_id", "text", max_hamming=6, n_docs=docs.count()
     ).select("id_1", "id_2", "hamming")

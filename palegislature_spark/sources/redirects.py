@@ -8,9 +8,9 @@ back to ``resolutions.yaml``.
 
 Distributed shape: the cache is a small (url, resolved) dimension —
 broadcast-joined against the URLs that need resolving; only cache
-MISSES go to the network resolver, batched per partition inside
-mapInPandas (executor-side, one HTTP session per partition in
-production). The union of hits + fresh resolutions is both the
+MISSES go to the network resolver, one call per Arrow batch through
+the kernel seam ``operators/kernels.py`` (executor-side, one HTTP
+session per partition in production). The union of hits + fresh resolutions is both the
 answer and the next cache generation — write it back with
 ``save_cache`` (YAML, same format as the reference's
 ``resolutions.yaml``) or ``sources.merge.upsert_parquet`` keyed by
@@ -25,12 +25,14 @@ in tests via an injected session).
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from urllib.parse import urljoin
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from palegislature_spark.operators.kernels import map_batches
 
 RESOLUTION_SCHEMA = T.StructType(
     [
@@ -104,16 +106,11 @@ def resolve_urls(
     hits = distinct_urls.join(F.broadcast(cache), "url", "inner")
     misses = distinct_urls.join(F.broadcast(cache), "url", "left_anti")
 
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def batch(pdf):
+        resolved = resolver(list(pdf["url"]))
+        return {"url": [u for u, _ in resolved], "resolved": [r for _, r in resolved]}
 
-        for pdf in batches:
-            resolved = resolver(list(pdf["url"]))
-            yield pd.DataFrame(
-                {"url": [u for u, _ in resolved], "resolved": [r for _, r in resolved]}
-            )
-
-    fresh = misses.mapInPandas(gen, RESOLUTION_SCHEMA)
+    fresh = map_batches(misses, ("url",), RESOLUTION_SCHEMA, batch)
     return hits.unionByName(fresh)
 
 

@@ -14,6 +14,14 @@ so they live with the tests instead of behind an operator switch.
     assign_to_centroids_expr  — similarity.assign_to_centroids
     pq_encode_expr            — pq.pq_encode
     apply_bpe_expr            — bpe.apply_bpe
+
+The pure-Python twins of the multimodal kernels follow: each is the
+per-row loop a vectorized numpy kernel is pinned against
+(tests/test_multimodal.py).
+
+    kr_mix_py    — multimodal._kr_mix_np
+    ahash_py     — multimodal.image_ahash
+    audio_fp_py  — multimodal.audio_fingerprint
 """
 
 from __future__ import annotations
@@ -25,6 +33,7 @@ from pyspark.sql.window import Window
 from palegislature_spark.functions.expr_util import let
 from palegislature_spark.operators.bpe import _replace_merge, _unwrap_toks, _wrap
 from palegislature_spark.operators.dedup import _SIMHASH_BITS
+from palegislature_spark.operators.multimodal import AHASH_BITS
 from palegislature_spark.operators.pq import _codebook_literal, _sq_l2
 from palegislature_spark.operators.similarity import _as_double, _dot, _norm
 
@@ -280,3 +289,42 @@ def _make_step(a: str, b: str):
 def _fold_syms(col, step):
     """Fold one symbol-array column through a merge step."""
     return F.aggregate(col, F.expr("array()").cast("array<string>"), step)
+
+
+def kr_mix_py(s: str, n: int) -> bytes:
+    """Pure-Python Karp-Rabin pixel/sample mix over a PREPARED window
+    string of length >= n+3 — byte i is the base-31 mix of chars
+    [i, i+3] mod 256 (multipliers 95/193/31/1 are 31^3..31^0 mod 256)."""
+    a = [ord(c) for c in s]
+    return bytes(
+        (a[i] * 95 + a[i + 1] * 193 + a[i + 2] * 31 + a[i + 3]) % 256
+        for i in range(n)
+    )
+
+
+def ahash_py(px: list, n_bits: int = AHASH_BITS) -> int:
+    """Pure-Python aHash: bit i set iff ``n * px[i] > sum(px)``."""
+    n = len(px)
+    if n == 0:
+        return 0
+    total = sum(px)
+    h = 0
+    for i, p in enumerate(px[:n_bits]):
+        if n * p > total:
+            h |= 1 << i
+    return h
+
+
+def audio_fp_py(pcm: bytes, frames: int = 60, frame_len: int = 4) -> int:
+    """Pure-Python frame-energy fingerprint: bit i set iff frame i's
+    energy (sum of (sample-128)^2) is above the mean frame energy."""
+    energies = []
+    for i in range(frames):
+        seg = pcm[i * frame_len:(i + 1) * frame_len]
+        energies.append(sum((b - 128) * (b - 128) for b in seg))
+    total = sum(energies)
+    h = 0
+    for i, e in enumerate(energies):
+        if frames * e > total:
+            h |= 1 << i
+    return h

@@ -469,3 +469,16 @@ def test_simhash_arrow_equals_expr(spark):
     assert arrow == expr
     assert 3 not in arrow  # NULL text drops on both paths
 
+
+
+def test_verify_pairs_by_array_drops_zero_overlap_at_nonpositive_threshold(spark):
+    """A candidate pair with disjoint shingle arrays has jaccard 0 and
+    must not emit even at threshold 0: the array verifier matches the
+    inverted index, which never pairs documents sharing no shingle."""
+    cand = spark.createDataFrame([(1, 2), (1, 3)], "id_1 long, id_2 long")
+    sharr = spark.createDataFrame(
+        [(1, [10, 11, 12]), (2, [20, 21]), (3, [12, 30])],
+        "doc_id long, sha array<long>",
+    )
+    got = rows(dedup._verify_pairs_by_array(cand, sharr, "doc_id", 0.0))
+    assert got == [(1, 3, 1 / 4)]

@@ -8,6 +8,7 @@ import pytest
 
 from palegislature_spark.operators import similarity
 from tests.reference_impls import assign_to_centroids_expr
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 SCHEMA = T.StructType(
@@ -528,21 +529,33 @@ def test_recall_vs_exact_short_corpus_denominator(spark):
     assert all(r.exact_k == 2 and r.recall == 1.0 for r in rows)
 
 
-def test_arrow_exact_assign_bit_identical_to_expression(skewed):
+def _assign_expr(cents, src, id_name, vec_name, out_id, out_vec):
+    """The expression twin in _assign_exact_arrow's signature."""
+    return assign_to_centroids_expr(src, cents, id_name, vec_name).select(
+        F.col(id_name).alias(out_id), "list_id", F.col("__vec").alias(out_vec)
+    )
+
+
+def test_arrow_exact_assign_bit_identical_to_expression(skewed, monkeypatch):
     """assign_impl='arrow_exact' (the r12 default) must be BIT-identical
     to the expression path — assignments AND refined centroid doubles —
     because the kernel accumulates dimension-sequentially (the same
     IEEE left fold _dot/_norm compute) instead of re-associating like
     the BLAS 'arrow' kernel.  Refinement composes assignment into the
-    Lloyd means, so exact equality here pins the whole chain."""
+    Lloyd means, so exact equality here pins the whole chain: the
+    expression side runs the same Lloyd chain with the kernel swapped
+    for its twin (ivf_assignments resolves the kernel on the driver)."""
     for kw in (
         {"n_lists": 4, "refine_iters": 0},
         {"n_lists": 4, "refine_iters": 2, "exact_replay": True},
         {"n_lists": None, "refine_iters": 1},
     ):
-        ce, ae = similarity.ivf_assignments(
-            skewed, assign_impl="expr", **kw
-        )
+        with monkeypatch.context() as m:
+            m.setattr(similarity, "_assign_exact_arrow", _assign_expr)
+            ce, ae = similarity.ivf_assignments(
+                skewed, assign_impl="arrow_exact", **kw
+            )
+            assert "MapInPandas" not in ae._jdf.queryExecution().toString()
         ck, ak = similarity.ivf_assignments(
             skewed, assign_impl="arrow_exact", **kw
         )

@@ -12,6 +12,7 @@ import pytest
 
 from palegislature_spark.operators import multimodal as mm
 from tests.conftest import rows
+from tests.reference_impls import ahash_py, audio_fp_py, kr_mix_py
 
 
 def payload(seed: int, n: int) -> bytes:
@@ -695,7 +696,7 @@ def test_vectorized_fingerprints_equal_python_twins_on_edge_shapes(spark):
     )
     got = {r.media_id: r.afp for r in mm.audio_fingerprint(media).collect()}
     for i, p in enumerate(pcms):
-        assert got[i] == mm._audio_fp_py(p), f"audio payload {i}"
+        assert got[i] == audio_fp_py(p), f"audio payload {i}"
 
     # images: two sizes in one batch (per-size vectorized groups)
     pix_a = bytes((i * 13 + 3) % 256 for i in range(60))
@@ -709,8 +710,8 @@ def test_vectorized_fingerprints_equal_python_twins_on_edge_shapes(spark):
     )
     codec = mm._PngCodec()
     got_i = {r.media_id: r.ahash for r in mm.image_ahash(imgs, codec=codec).collect()}
-    assert got_i[0] == mm._ahash_py(list(pix_a))
-    assert got_i[1] == mm._ahash_py(list(pix_b))
+    assert got_i[0] == ahash_py(list(pix_a))
+    assert got_i[1] == ahash_py(list(pix_b))
 
     # video: uniform payload + ragged payload (frame sizes differ ->
     # pure-Python fallback) in one batch
@@ -746,9 +747,9 @@ def test_kr_mix_np_equals_py():
         for t in texts:
             # png-style space pad
             s_pad = (t + " " * (n + 3))[: n + 3]
-            assert mm._kr_mix_np(s_pad, n) == mm._kr_mix_py(s_pad, n)
+            assert mm._kr_mix_np(s_pad, n) == kr_mix_py(s_pad, n)
             # wav/avi-style cyclic fill
             reps = (n + 3) // max(len(t), 1) + 1
             base = (t * reps)[: n + 3]
             s_cyc = base + " " * (n + 3 - len(base))
-            assert mm._kr_mix_np(s_cyc, n) == mm._kr_mix_py(s_cyc, n)
+            assert mm._kr_mix_np(s_cyc, n) == kr_mix_py(s_cyc, n)

@@ -2,8 +2,9 @@
 
 An expression twin that exists only to pin a kernel's bit-equality
 lives in tests/reference_impls.py, never behind an operator switch,
-kernels measured as losers stay deleted, and persisted datasets
-commit through palegislature_spark.sources.commit only.  Pure
+kernels measured as losers stay deleted, persisted datasets commit
+through palegislature_spark.sources.commit only, and every Arrow
+kernel runs through palegislature_spark.operators.kernels.  Pure
 introspection — no Spark session.
 """
 
@@ -88,6 +89,12 @@ def test_no_operator_takes_an_impl_switch():
         ("palegislature_spark.operators.pq", "_pq_committed_delta_ids"),
         ("palegislature_spark.streaming.jobs", "_unfolded_minhash_deltas"),
         ("palegislature_spark.streaming.jobs", "_unfolded_ivf_deltas"),
+        # test-only pure-Python twins, now in tests/reference_impls.py,
+        # and the fan-out policy, now the kernel seam's
+        ("palegislature_spark.operators.multimodal", "_kr_mix_py"),
+        ("palegislature_spark.operators.multimodal", "_ahash_py"),
+        ("palegislature_spark.operators.multimodal", "_audio_fp_py"),
+        ("palegislature_spark.operators.multimodal", "_fan_out"),
     ],
 )
 def test_deleted_kernels_stay_deleted(module, name):
@@ -114,3 +121,31 @@ def test_storage_goes_through_the_commit_module():
         if raw.search(line)
     ]
     assert offenders == []
+
+
+def test_ivf_assignments_offers_no_expression_assign():
+    """Only the two Arrow kernels remain; the expression assignment is
+    the test twin tests/reference_impls.assign_to_centroids_expr.  The
+    switch is validated before any Spark work, so no session is needed."""
+    from palegislature_spark.operators.similarity import ivf_assignments
+
+    with pytest.raises(ValueError, match="assign_impl"):
+        ivf_assignments(None, assign_impl="expr")
+
+
+def test_arrow_kernels_go_through_the_seam():
+    """palegislature_spark.operators.kernels is the only caller of
+    DataFrame.mapInPandas, and no module reaches for the fan-out policy
+    as another module's private helper."""
+    root = pathlib.Path(operators_pkg.__file__).parents[1]
+    seam = root / "operators" / "kernels.py"
+    callers, fan_out = [], []
+    for path in sorted(root.rglob("*.py")):
+        text = path.read_text()
+        if ".mapInPandas(" in text and path != seam:
+            callers.append(str(path.relative_to(root)))
+        if "_fan_out" in text:
+            fan_out.append(str(path.relative_to(root)))
+    assert callers == []
+    assert fan_out == []
+    assert ".mapInPandas(" in seam.read_text()
